@@ -38,16 +38,24 @@ object Ingest {
     StructField("n_tok", IntegerType),
     StructField("source", StringType)))
 
-  /** Parse + validate. Reference semantics (P1,
-    * `src/utils/mod.rs:122-153`):
+  /** Parse + validate: [[split]] of [[classify]]. Valid rows project to
+    * the token schema; dead letters keep their payload and error.
+    */
+  def parse(msgs: Dataset[RawMessage]): (DataFrame, Dataset[DeadLetter]) =
+    split(classify(msgs))
+
+  /** Classify each message in one projection, keeping every input
+    * column and adding `__parsed` (the payload struct), `__error` (the
+    * dead-letter reason, null otherwise) and `__empty`. Reference
+    * semantics (P1, `src/utils/mod.rs:122-153`):
     *  - non-object / unparseable JSON -> dead letter,
-    *  - empty object `{}` -> row silently dropped (NOT an error),
+    *  - empty object `{}` -> `__empty`: row silently dropped (NOT an error),
     *  - missing schema field -> dead letter (`MissingField`),
     *  - type mismatch -> dead letter.
     * Null field values are allowed through parse; rows with null
     * required fields are quarantined at projection time.
     */
-  def parse(msgs: Dataset[RawMessage]): (DataFrame, Dataset[DeadLetter]) = {
+  def classify(msgs: Dataset[_]): DataFrame = {
     val spark = msgs.sparkSession
     import spark.implicits._
     // json_object_keys is null for non-objects — that plus a FAILFAST-free
@@ -74,18 +82,28 @@ object Ingest {
         exists($"__parsed".getField("tokens"), e => e.isNull), lit("tokens"))
     val nullList = filter(array(nullReq: _*), c => c.isNotNull)
 
-    val classified = keyed.withColumn("__error",
-      when(nonObject, lit("ParseError: payload is not a JSON object"))
-        .when(emptyObject, lit(null.asInstanceOf[String])) // dropped, not an error
-        .when(size(missingList) > 0,
-          concat(lit("MissingField: "), array_join(missingList, ", ")))
-        .when($"__parsed".isNull, lit("TypeMismatch: payload does not match schema"))
-        .when(size(nullList) > 0,
-          concat(lit("TypeMismatch: null or mistyped required field: "),
-            array_join(nullList, ", "))))
+    keyed
+      .withColumn("__error",
+        when(nonObject, lit("ParseError: payload is not a JSON object"))
+          .when(emptyObject, lit(null.asInstanceOf[String])) // dropped, not an error
+          .when(size(missingList) > 0,
+            concat(lit("MissingField: "), array_join(missingList, ", ")))
+          .when($"__parsed".isNull, lit("TypeMismatch: payload does not match schema"))
+          .when(size(nullList) > 0,
+            concat(lit("TypeMismatch: null or mistyped required field: "),
+              array_join(nullList, ", "))))
+      .withColumn("__empty", emptyObject)
+      .drop("__keys")
+  }
 
+  /** Split a [[classify]]d frame into valid rows (token schema plus
+    * Kafka metadata) and dead letters; `__empty` rows go to neither.
+    */
+  def split(classified: DataFrame): (DataFrame, Dataset[DeadLetter]) = {
+    val spark = classified.sparkSession
+    import spark.implicits._
     val valid = classified
-      .filter($"__error".isNull && !emptyObject)
+      .filter($"__error".isNull && !$"__empty")
       .select($"topic", $"partition", $"offset", $"key",
         $"__parsed.doc_id".as("doc_id"), $"__parsed.tokens".as("tokens"),
         $"__parsed.n_tok".as("n_tok"), $"__parsed.source".as("source"))
@@ -152,13 +170,31 @@ object Ingest {
   def watermarks(s: Snapshot): Map[String, Long] =
     graft.table.Format.parseWatermarks(s.summary)
 
+  /** One topic/partition's share of a batch: fresh offset bounds
+    * (`mn > mx` when every message was replayed) and message counts.
+    */
+  private[ingest] case class Tally(mn: Long, mx: Long, replayed: Long,
+      dead: Long, valid: Long) {
+    def +(o: Tally): Tally = Tally(math.min(mn, o.mn), math.max(mx, o.mx),
+      replayed + o.replayed, dead + o.dead, valid + o.valid)
+  }
+  private[ingest] object Tally {
+    val Zero: Tally = Tally(Long.MaxValue, Long.MinValue, 0L, 0L, 0L)
+    def of(offset: Long, replay: Boolean, dead: Boolean, valid: Boolean): Tally =
+      if (replay) Zero.copy(replayed = 1L)
+      else Tally(offset, offset, 0L, if (dead) 1L else 0L, if (valid) 1L else 0L)
+  }
+
   case class IngestResult(snapshot: Snapshot, appended: Long, deduped: Long,
       deadLettered: Long, replayFiltered: Long)
 
   /** One ingest batch = one atomic snapshot (the reference's
     * flush-then-commit: Delta commit first, then offsets — here the
     * watermark rides inside the same atomic snapshot, which is strictly
-    * stronger).
+    * stronger). One classified cache, one aggregate, then DLQ write +
+    * dedup + write + commit: the batch is flagged for replay and
+    * [[classify]]d (one parse pass) into one cached frame that
+    * [[ingestFresh]] reads for every step.
     */
   def ingestBatch(table: TokenTable, msgs: Dataset[RawMessage],
       deadLetterDir: Option[String] = None): IngestResult = {
@@ -167,52 +203,65 @@ object Ingest {
     val parent = if (table.currentVersion >= 0) Some(table.current) else None
     val wm = parent.map(watermarks).getOrElse(Map.empty)
 
-    // Replay filter: drop offsets at or below the committed watermark.
-    // A broadcast left-join against the (small) watermark table — NOT a
+    // Replay flag: offsets at or below the committed watermark. A
+    // broadcast left-join against the (small) watermark table — NOT a
     // per-partition when()-chain, whose expression tree is
     // O(#topic-partitions) and collapses codegen at a few thousand
-    // partitions.
-    val unfiltered = msgs.withColumn("__tp", concat_ws("/", $"topic", $"partition"))
-    val filtered =
-      if (wm.isEmpty) unfiltered
+    // partitions, nor a map literal, whose lookup scans its keys per row.
+    val flagged =
+      if (wm.isEmpty) msgs.withColumn("__replay", lit(false))
       else {
         val wmDf = wm.toSeq.toDF("__tp", "__wm")
-        unfiltered.join(broadcast(wmDf), Seq("__tp"), "left")
-          .filter($"offset" > coalesce($"__wm", lit(Long.MinValue)))
-          .drop("__wm")
+        msgs.withColumn("__tp", concat_ws("/", $"topic", $"partition"))
+          .join(broadcast(wmDf), Seq("__tp"), "left")
+          .withColumn("__replay", coalesce($"offset" <= $"__wm", lit(false)))
+          .drop("__tp", "__wm")
       }
-    // Cache the surviving batch: the pipeline below takes several
-    // actions (counts, DLQ write, watermark agg, data write) and must
-    // not re-read + re-parse the source for each one.
-    val fresh = filtered.drop("__tp")
-      .as[RawMessage].cache()
-    try ingestFresh(table, msgs, fresh, parent, deadLetterDir)
-    finally fresh.unpersist()
+    val batch = classify(flagged).cache()
+    try ingestFresh(table, batch, parent, deadLetterDir)
+    finally batch.unpersist()
   }
 
-  /** The cached-batch pipeline (split out so the cache is released on
-    * EVERY exit — a rebase-guard abort is an expected outcome under
-    * concurrent writers and must not leak executor storage).
+  /** The cached-batch pipeline: one aggregate, then DLQ write + dedup +
+    * write + commit, all reading the classified cache. Split out so the
+    * cache is released on EVERY exit — a rebase-guard abort is an
+    * expected outcome under concurrent writers and must not leak
+    * executor storage.
     */
-  private def ingestFresh(table: TokenTable, msgs: Dataset[RawMessage],
-      fresh: Dataset[RawMessage], parent: Option[Snapshot],
-      deadLetterDir: Option[String]): IngestResult = {
+  private def ingestFresh(table: TokenTable, batch: DataFrame,
+      parent: Option[Snapshot], deadLetterDir: Option[String]): IngestResult = {
     val spark = table.spark
     import spark.implicits._
-    val replayFiltered = msgs.count() - fresh.count()
-
-    // This batch's per-partition offset ranges (max advances the
-    // watermark; min feeds the concurrent-writer overlap guard below).
-    val ranges = fresh
-      .groupBy(concat_ws("/", $"topic", $"partition").as("tp"))
-      .agg(min($"offset").as("mn"), max($"offset").as("mx"))
-      .as[(String, Long, Long)].collect()
+    // One pass over the cache, folded per task and merged on the driver,
+    // yields every count and this batch's per-partition fresh offset
+    // ranges (max advances the watermark; min feeds the concurrent-writer
+    // overlap guard below). A grouped aggregate would plan an exchange
+    // and so one more job (its map stage) per batch.
+    val tallies = batch
+      .select(concat_ws("/", $"topic", $"partition"), $"offset", $"__replay",
+        $"__error".isNotNull, $"__error".isNull && !$"__empty")
+      .as[(String, Long, Boolean, Boolean, Boolean)]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[String, Tally]
+        rows.foreach { case (tp, offset, replay, dead, valid) =>
+          acc(tp) = acc.getOrElse(tp, Tally.Zero) + Tally.of(offset, replay, dead, valid)
+        }
+        acc.iterator
+      }
+      .collect()
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    // A partition whose messages were all replayed adds no range.
+    val ranges = tallies.toSeq.collect {
+      case (tp, t) if t.mn <= t.mx => (tp, t.mn, t.mx)
+    }
     val newWm = ranges.map { case (tp, _, mx) => tp -> mx }.toMap
     val batchMin = ranges.map { case (tp, mn, _) => tp -> mn }.toMap
+    val replayFiltered = tallies.values.map(_.replayed).sum
+    // THIS batch's dead letters (the DLQ dir is cumulative).
+    val deadCount = tallies.values.map(_.dead).sum
+    val validCount = tallies.values.map(_.valid).sum
 
-    val (valid, dead) = parse(fresh)
-    // Count THIS batch's dead letters (the DLQ dir is cumulative).
-    val deadCount = dead.count()
+    val (valid, dead) = split(batch.filter(!$"__replay"))
     // Deterministic per-batch subdirectory + overwrite: a crash between
     // this write and the snapshot commit leaves the watermark
     // unadvanced, so the retried (byte-identical) batch re-writes the
@@ -229,9 +278,7 @@ object Ingest {
         s"$dir/batch-$tag"
       } else None
     dlqPath.foreach(p => dead.write.mode("overwrite").parquet(p))
-    val deduped = dedupFirstWins(valid)
-    val validCount = valid.count()
-    val rows = deduped
+    val rows = dedupFirstWins(valid)
       .sortWithinPartitions($"offset") // D2: offset order within files
       .select("doc_id", "tokens", "n_tok", "source")
 
