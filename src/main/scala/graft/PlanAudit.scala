@@ -2,8 +2,13 @@ package graft
 
 import graft.ingest.TokenGen
 import graft.table.TokenTable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Prints `explain("formatted")` for the engine's hot paths so plan
   * regressions (lost pushdown, lost column pruning, broken codegen,
@@ -11,6 +16,41 @@ import org.apache.spark.sql.functions._
   * Findings are recorded in PLANS.md.
   */
 object PlanAudit {
+
+  /** Every node of an executed plan, through adaptive wrappers and
+    * query stages (a cached relation's inner plan is not part of the
+    * query that reads it).
+    */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case _ => p +: p.children.flatMap(planNodes)
+  }
+
+  /** The query executions of every data-file write `body` issues, in
+    * order: parquet writes into a table's `data/` dir, i.e. the plans
+    * `TokenTable.writeDataFilesTo` actually ran.
+    */
+  def capturedWrites(spark: SparkSession)(body: => Any): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (planNodes(qe.executedPlan).exists {
+          case w: DataWritingCommandExec => w.cmd match {
+            case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains("/data/")
+            case _ => false
+          }
+          case _ => false
+        }) seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; GraftSqlBridge.drainListenerBus(spark) }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -40,11 +80,6 @@ object PlanAudit {
       t.scan().select(graft.functions.CurveKeys.zkey(20,
         xxhash64($"doc_id").bitwiseAND(lit((1L << 20) - 1)),
         lit(3L), least($"n_tok".cast("long"), lit(1048575L))).as("z"))
-    }
-
-    section("merge anti-join (small source must BroadcastHashJoin)") {
-      val src = TokenGen.asTokenRows(TokenGen.generate(spark, 100, numPartitions = 1))
-      t.scan().join(src, Seq("doc_id"), "left_anti")
     }
 
     section("dedup window (single shuffle on doc_id)") {
@@ -128,22 +163,21 @@ object PlanAudit {
       println(s"rows=${one.count()} (must be 1)")
     }
 
-    section("merge rewrite (ONE touched scan; hash LeftAnti on the composite " +
-        "(doc_id, hot-flag) key — cold rows distribute by doc_id, no NULL skew)") {
+    // The merge rewrite as Merge.mergeInto actually runs it: the
+    // executed plan of its data-file write, captured by a listener.
+    {
+      println(s"\n========== merge rewrite (ONE touched scan; broadcast LeftAnti; " +
+        "ONE Exchange = the range placement) ==========")
+      val loc1 = s"${System.getProperty("java.io.tmpdir")}/graft_planaudit_merge"
+      Bench.wipeDir(loc1)
+      val t1 = TokenTable.create(spark, loc1)
+      t1.append(TokenGen.asTokenRows(TokenGen.generate(spark, 10000, numPartitions = 4)))
       val src = TokenGen.asTokenRows(TokenGen.generate(spark, 100, numPartitions = 1))
-      val prune = graft.maintain.Merge.pruneTouchedFull(
-        t.filesLocal(t.current), src.select($"doc_id"))
-      val idx = graft.functions.SearchOps.bucketOfStr($"doc_id", prune.extLo)
-      val part = when(idx >= 1,
-        when($"doc_id" <= element_at(lit(prune.extHi), idx), "h").otherwise("c"))
-        .otherwise(lit("c"))
-      t.scan().withColumn("__part", part).createOrReplaceTempView("pa_t")
-      src.createOrReplaceTempView("pa_s")
-      spark.sql(
-        """SELECT t.doc_id, t.tokens, t.n_tok, t.source, t.__part
-          |FROM pa_t t LEFT ANTI JOIN (SELECT doc_id, 0 AS __k FROM pa_s) s
-          |  ON t.doc_id = s.doc_id
-          | AND (CASE WHEN t.__part = 'h' THEN 0 ELSE 1 END) = s.__k""".stripMargin)
+        .withColumn("__p", lit(0L))
+      capturedWrites(spark) {
+        graft.maintain.Merge.mergeInto(t1, src, "__p", "pa-merge")
+      }.foreach(qe => println(qe.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
     }
 
     // Row-level DML (M9): a doc_id-range DELETE on a ByDocId-clustered

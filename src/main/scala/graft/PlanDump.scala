@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * plan (the round-5 shape, reconstructed via the A/B confs that
   * preserve it) and an `_after` plan (current defaults). Maintenance
   * rewrites (merge/zorder/delete) dump through the GRAFT_PLAN_DUMP
-  * hooks in Merge/Cluster/Delete instead — run MergeProbe/BenchExtra
-  * with that env var set.
+  * hooks in Merge/Cluster/Delete instead — run BenchExtra with that
+  * env var set.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

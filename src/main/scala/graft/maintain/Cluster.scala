@@ -383,6 +383,7 @@ object Cluster {
       // evolved (added) columns survive the rewrite.
       .select(graft.table.Format.schemaOf(parent).fieldNames.toIndexedSeq.map(col): _*)
 
+    val t0 = System.nanoTime()
     val out = table.writeDataFilesTo(clustered, s"data/$jobId-v${parent.version}",
       overwrite = true, sortBy = None)
     // Lineage input is a bounded marker, not the rewrite path list —
@@ -391,7 +392,7 @@ object Cluster {
     Lineage.completeTask(table, Lineage.TaskRecord(
       jobId, "cluster-by-docid", Seq(s"<all-but-carried:$nRewrite-files>"), out,
       rows = out.map(_.rows).sum, tokenCount = out.map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
+      status = "done", durationMs = (System.nanoTime() - t0) / 1000000))
     // Survivors are exactly carried ++ out (bounded): write the new
     // manifest DIRECTLY instead of filtering the parent inventory.
     val manifest = table.writeManifest(carried ++ out)
@@ -532,6 +533,7 @@ object Cluster {
     }
     // Version-scoped output dir: re-running a jobId after its commit must
     // never overwrite files the current snapshot references.
+    val t0 = System.nanoTime()
     val out = timing("shuffle+sort+write+stats") {
       table.writeDataFilesTo(clustered, s"data/$jobId-v${parent.version}",
         overwrite = true, sortBy = None)
@@ -541,7 +543,7 @@ object Cluster {
     Lineage.completeTask(table, Lineage.TaskRecord(
       jobId, "cluster", Seq(s"<full-rewrite:${inv.files}-files>"), out,
       rows = out.map(_.rows).sum, tokenCount = out.map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
+      status = "done", durationMs = (System.nanoTime() - t0) / 1000000))
     val manifest = timing("manifest") { table.writeManifest(out) }
     // removedPaths empty: the rewrite-vs-append commit test keys on
     // keepManifests == parent.manifests (fails here), so a lost CAS

@@ -1,6 +1,5 @@
 package graft.maintain
 
-import graft.lineage.Lineage
 import graft.table.{DataFile, ManifestFileIndex, Snapshot, TokenTable}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -44,73 +43,6 @@ object Delete {
   case class Result(snapshot: Snapshot, droppedFiles: Int, rewrittenFiles: Int,
       untouchedFiles: Long, deletedRows: Long, rewrittenBytes: Long,
       decodedBytes: Long = 0L, coldCopiedBytes: Long = 0L)
-
-  /** Result of row-group cold-copy planning over a copy-on-write DML
-    * rewrite's grazed files (shared by DELETE and UPDATE — MERGE has its
-    * own extent source). `fullyCold` files stay in the snapshot verbatim
-    * (the predicate provably touches none of their row groups despite
-    * the file-level stats saying "maybe" — possible when the file's
-    * [min,max] spans a gap between row groups); `coldFiles` are the
-    * bytewise column-chunk copies of cold runs inside mixed files;
-    * `decodeRels` is what the rewrite must actually decode.
-    */
-  private[maintain] case class ColdPlan(
-      splits: Seq[graft.table.RowGroupCopy.Split],
-      fullyCold: Seq[DataFile],
-      coldFiles: Seq[DataFile],
-      decodeRels: Seq[String],
-      decodedBytes: Long) {
-    def coldCopiedBytes: Long = coldFiles.map(_.bytes).sum
-    /** Hot extracts served only the rewrite; drop them eagerly (same
-      * policy as Merge — orphan GC would collect them, but leaving
-      * temporaries to GC hides bugs).
-      */
-    def dropHotExtracts(table: TokenTable, hotxDir: String): Unit =
-      if (splits.exists(s => !s.allCold && s.coldFiles.nonEmpty)) {
-        val hx = new org.apache.hadoop.fs.Path(s"${table.location}/$hotxDir")
-        hx.getFileSystem(table.spark.sessionState.newHadoopConf())
-          .delete(hx, true)
-      }
-  }
-
-  /** Plan the row-group-level cold copy for `rw` (the partially-matching
-    * files a DML rewrite would otherwise decode in full): row groups
-    * whose footer stats PROVE the predicate cannot hold for any of their
-    * rows ([[ManifestFileIndex.mightMatch]] applied per group — the SAME
-    * decision procedure the file-level classification and the scan
-    * planner use, over ALL stats columns: doc_id, source, n_tok) carry
-    * over as bytewise column-chunk copies; only possibly-matching groups
-    * decode. Cost then tracks the PREDICATE'S FOOTPRINT, not the grazed
-    * files' full size. A predicate that can never prune a group
-    * ([[ManifestFileIndex.canPrune]] false — no stats-column term, or
-    * every OR arm not prunable) skips the footer reads and decodes
-    * everything grazed (sound, never wrong).
-    */
-  private[maintain] def planCold(table: TokenTable, cond: Expression,
-      rw: Seq[DataFile], coldDir: String, hotxDir: String): ColdPlan = {
-    val splits: Seq[graft.table.RowGroupCopy.Split] =
-      if (rw.nonEmpty && ManifestFileIndex.canPrune(cond))
-        graft.table.RowGroupCopy.planAllByPredicate(table.spark,
-          table.location, rw.map(_.path), coldDir, hotxDir, cond)
-      else Nil
-    fromSplits(splits, rw)
-  }
-
-  /** Assemble a [[ColdPlan]] from per-file splits; empty splits = the
-    * unbounded degenerate plan (decode every grazed file).
-    */
-  private[maintain] def fromSplits(splits: Seq[graft.table.RowGroupCopy.Split],
-      rw: Seq[DataFile]): ColdPlan = {
-    val byPath = rw.map(f => f.path -> f).toMap
-    if (splits.nonEmpty)
-      ColdPlan(splits,
-        fullyCold = splits.filter(_.allCold).map(s => byPath(s.origPath)),
-        coldFiles = splits.flatMap(_.coldFiles),
-        decodeRels = splits.flatMap(_.decodeRel),
-        decodedBytes = splits.map(_.decodeBytes).sum)
-    else
-      ColdPlan(Nil, Nil, Nil, rw.map(_.path), rw.map(_.bytes).sum)
-  }
 
   /** Resolve + normalize a DML predicate against the table schema once,
     * on a scan plan, so classification sees bound AttributeReferences
@@ -167,65 +99,58 @@ object Delete {
 
     // Row-group-level cold copy (same machinery as MERGE): decode only
     // the groups the predicate's doc_id cover can touch.
-    val coldDir = s"data/$jobId-v${parent.version}-cold"
-    val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-    val plan = planCold(table, cond, rw, coldDir, hotxDir)
-    import plan.{fullyCold, coldFiles, decodeRels, decodedBytes}
+    val plan = Rewrite.byPredicate(table, jobId, parent, cond, rw)
 
     // Every grazed file fully cold and nothing drops: provably nothing
     // to delete — commit nothing (same contract as the no-op predicate).
-    if (drop.isEmpty && decodeRels.isEmpty)
+    if (drop.isEmpty && plan.decodeRels.isEmpty)
       return Result(parent, 0, 0, untouched + rw.size, 0L, 0L)
 
     // Copy-on-write rewrite of the decode set only: keep survivors,
     // preserve doc_id order within files.
-    val out: Seq[DataFile] =
-      if (decodeRels.isEmpty) Nil
+    val survivors =
+      if (plan.decodeRels.isEmpty) None
       else {
-        val paths = decodeRels.map(p => s"${table.location}/$p")
+        val paths = plan.decodeRels.map(p => s"${table.location}/$p")
         import org.apache.spark.sql.functions.{coalesce, lit}
-        val survivors = spark.read.schema(graft.table.Format.schemaOf(parent))
+        val df = spark.read.schema(graft.table.Format.schemaOf(parent))
           .parquet(paths: _*)
           .filter(!coalesce(predicate, lit(false)))
         sys.env.get("GRAFT_PLAN_DUMP").foreach { d =>
           val p = java.nio.file.Paths.get(d, "ns_delete_rewrite.txt")
           java.nio.file.Files.createDirectories(p.getParent)
           java.nio.file.Files.writeString(p,
-            s"decode files: ${decodeRels.size} of ${untouched + drop.size + rw.size}" +
-              s" total; decoded bytes: $decodedBytes\n" +
-              survivors.queryExecution.explainString(
+            s"decode files: ${plan.decodeRels.size} of ${untouched + drop.size + rw.size}" +
+              s" total; decoded bytes: ${plan.decodedBytes}\n" +
+              df.queryExecution.explainString(
                 org.apache.spark.sql.execution.FormattedMode))
         }
-        table.writeDataFilesTo(survivors, s"data/$jobId-v${parent.version}",
-          overwrite = true, sortBy = Some("doc_id"))
+        Some(df)
       }
+    commitDelete(table, parent, jobId, drop, rw, untouched, plan, survivors)
+  }
 
-    Lineage.completeTask(table, Lineage.TaskRecord(
-      jobId, "delete", (drop ++ rw).map(_.path), coldFiles ++ out,
-      rows = (coldFiles ++ out).map(_.rows).sum,
-      tokenCount = (coldFiles ++ out).map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
-
-    val removed = (drop ++ rw).map(_.path).toSet -- fullyCold.map(_.path)
-    val deletedRows = drop.map(_.rows).sum +
-      (rw.map(_.rows).sum - fullyCold.map(_.rows).sum) -
-      coldFiles.map(_.rows).sum - out.map(_.rows).sum
-    val manifest = table.writeSurvivorManifest(parent, removed, coldFiles ++ out)
-    val snap = table.commit(Some(parent), "delete",
-      addManifests = Seq(manifest), keepManifests = Nil,
-      removedPaths = removed,
-      summary = Map(
-        "deleted-rows" -> deletedRows.toString,
+  /** The shared DELETE commit: the rewrite tail plus the deleted-row
+    * count, which falls out of the stats delta.
+    */
+  private def commitDelete(table: TokenTable, parent: Snapshot, jobId: String,
+      drop: Seq[DataFile], rw: Seq[DataFile], untouched: Long,
+      plan: Rewrite.ColdPlan, survivors: Option[DataFrame]): Result = {
+    def deletedRows(out: Seq[DataFile]): Long = drop.map(_.rows).sum +
+      (rw.map(_.rows).sum - plan.fullyCold.map(_.rows).sum) -
+      plan.coldFiles.map(_.rows).sum - out.map(_.rows).sum
+    val (snap, out) = Rewrite.commit(table, parent, jobId, "delete",
+        drop ++ rw, plan, survivors) { out =>
+      Map(
+        "deleted-rows" -> deletedRows(out).toString,
         "dropped-files" -> drop.size.toString,
         "rewritten-files" -> rw.size.toString,
         "untouched-files" -> untouched.toString,
-        "rewritten-bytes" -> rw.map(_.bytes).sum.toString,
-        "decoded-bytes" -> decodedBytes.toString,
-        "cold-copied-bytes" -> plan.coldCopiedBytes.toString))
-    plan.dropHotExtracts(table, hotxDir)
-    Result(snap, drop.size, rw.size, untouched, deletedRows,
+        "rewritten-bytes" -> rw.map(_.bytes).sum.toString)
+    }
+    Result(snap, drop.size, rw.size, untouched, deletedRows(out),
       rewrittenBytes = rw.map(_.bytes).sum,
-      decodedBytes = decodedBytes,
+      decodedBytes = plan.decodedBytes,
       coldCopiedBytes = plan.coldCopiedBytes)
   }
 
@@ -263,15 +188,8 @@ object Delete {
       val rw = prunePlan.touched
       val untouched = prunePlan.totalFiles - rw.size
       if (rw.isEmpty) return Result(parent, 0, 0, untouched, 0L, 0L)
-      val prune = prunePlan.prune
-      val coldDir = s"data/$jobId-v${parent.version}-cold"
-      val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-      val splits: Seq[graft.table.RowGroupCopy.Split] =
-        if (prune.extLo.nonEmpty)
-          graft.table.RowGroupCopy.planAll(spark, table.location,
-            rw.map(_.path), coldDir, hotxDir, prune.extLo, prune.extHi)
-        else Nil
-      val plan = fromSplits(splits, rw)
+      val plan = Rewrite.byExtents(table, jobId, parent,
+        prunePlan.prune.extLo, prunePlan.prune.extHi, rw)
       if (plan.decodeRels.isEmpty)
         return Result(parent, 0, 0, untouched + rw.size, 0L, 0L)
       val paths = plan.decodeRels.map(p => s"${table.location}/$p")
@@ -281,33 +199,7 @@ object Delete {
       val survivors = spark.read.schema(graft.table.Format.schemaOf(parent))
           .parquet(paths: _*)
         .join(distinctIds, Seq("doc_id"), "left_anti")
-      val out = table.writeDataFilesTo(survivors, s"data/$jobId-v${parent.version}",
-        overwrite = true, sortBy = Some("doc_id"))
-      Lineage.completeTask(table, Lineage.TaskRecord(
-        jobId, "delete", rw.map(_.path), plan.coldFiles ++ out,
-        rows = (plan.coldFiles ++ out).map(_.rows).sum,
-        tokenCount = (plan.coldFiles ++ out).map(_.sumNtok).sum,
-        status = "done", durationMs = 0L))
-      val removed = rw.map(_.path).toSet -- plan.fullyCold.map(_.path)
-      val deletedRows = rw.map(_.rows).sum - plan.fullyCold.map(_.rows).sum -
-        plan.coldFiles.map(_.rows).sum - out.map(_.rows).sum
-      val manifest = table.writeSurvivorManifest(parent, removed,
-        plan.coldFiles ++ out)
-      val snap = table.commit(Some(parent), "delete",
-        addManifests = Seq(manifest), keepManifests = Nil,
-        removedPaths = removed,
-        summary = Map(
-          "deleted-rows" -> deletedRows.toString,
-          "dropped-files" -> "0",
-          "rewritten-files" -> rw.size.toString,
-          "untouched-files" -> untouched.toString,
-          "rewritten-bytes" -> rw.map(_.bytes).sum.toString,
-          "decoded-bytes" -> plan.decodedBytes.toString,
-          "cold-copied-bytes" -> plan.coldCopiedBytes.toString))
-      plan.dropHotExtracts(table, hotxDir)
-      Result(snap, 0, rw.size, untouched, deletedRows, rw.map(_.bytes).sum,
-        decodedBytes = plan.decodedBytes,
-        coldCopiedBytes = plan.coldCopiedBytes)
+      commitDelete(table, parent, jobId, Nil, rw, untouched, plan, Some(survivors))
     }
   }
 }

@@ -1,14 +1,12 @@
 package graft.maintain
 
 import graft.functions.{Search, SearchOps}
-import graft.lineage.Lineage
 import graft.table.{DataFile, Snapshot, TokenTable}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** MERGE INTO dedup-upsert keyed on `doc_id` (north-star M6), compiled
-  * through Spark SQL over temp views.
+/** MERGE INTO dedup-upsert keyed on `doc_id` (north-star M6).
   *
   * Plan:
   *  1. First-wins dedup of the source batch on `doc_id` — the
@@ -18,11 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  2. File pruning: join source key bounds against manifest min/max —
   *     only data files whose [minDocId, maxDocId] can contain a source
   *     key are touched; everything else carries over untouched (no IO).
-  *  3. Rewrite: `touched LEFT ANTI JOIN source ON doc_id` ∪ `source`
-  *     (upsert = matched rows replaced, unmatched inserted), via
-  *     `spark.sql` so Catalyst plans the join (broadcast when the source
-  *     is small, AQE skew-split otherwise).
-  *  4. One atomic snapshot: new files + untouched survivors.
+  *     Inside touched files, row groups outside every source-key extent
+  *     carry over as bytewise copies.
+  *  3. Rewrite: `touched LEFT ANTI JOIN source keys ON doc_id` ∪ `source`
+  *     (upsert = matched rows replaced, unmatched inserted), range-placed
+  *     by one exchange on doc_id so every output file keeps tight stats.
+  *  4. One atomic snapshot through [[Rewrite.commit]]: new files +
+  *     untouched survivors.
   */
 object Merge {
 
@@ -31,21 +31,15 @@ object Merge {
       decodedBytes: Long = 0L, coldCopiedBytes: Long = 0L,
       fullyColdFiles: Int = 0)
 
-  /** Segment-index pruning output: the touched file set plus the
-    * machinery to classify individual ROWS by hit-segment membership
-    * (bounds = sorted distinct file endpoints; hitSegs = sorted segments
-    * containing at least one source key), plus the per-segment
-    * source-key EXTENTS (extLo/extHi, parallel arrays sorted by lo,
-    * disjoint — segments are disjoint intervals): `[extLo(i), extHi(i)]`
-    * together cover every source key, so a file or row group whose
-    * range intersects NO extent provably matches no key. The extent
-    * test is strictly tighter than hit-segment membership (a segment
-    * spans from the previous endpoint, so segment granularity spills
-    * below each extent's lo).
+  /** Segment-index pruning output: the touched file set, the capped
+    * sorted file-endpoint array the segmentation started from, and the
+    * per-segment source-key EXTENTS (extLo/extHi, parallel arrays sorted
+    * by lo, disjoint — segments are disjoint intervals): `[extLo(i),
+    * extHi(i)]` together cover every source key, so a file or row group
+    * whose range intersects NO extent provably matches no key.
     */
   case class Prune(touchedPaths: Set[String], bounds: Array[String],
-      hitSegs: Array[Int], extLo: Array[String] = Array.empty,
-      extHi: Array[String] = Array.empty)
+      extLo: Array[String] = Array.empty, extHi: Array[String] = Array.empty)
 
   /** Does [lo, hi] intersect any source-key extent? Extents are sorted
     * by lo and disjoint: find the first extent whose hi >= lo (binary
@@ -100,22 +94,17 @@ object Merge {
     *     ([[intersectsExtents]]: one binary search + one compare per
     *     file, on the driver, which streams the file list for
     *     planning). The same test classifies row GROUPS for the
-    *     bytewise cold copy and — as a codegen'd column expression —
-    *     individual ROWS for the hot/cold rewrite split in
-    *     [[mergeInto]].
+    *     bytewise cold copy in [[mergeInto]].
     *
     * Over-approximates only within an extent between actual keys (a
     * false positive reads or anti-joins extra rows; never misses a
     * match).
     */
-  def pruneTouched(files: Seq[DataFile], srcKeys: DataFrame): Set[String] =
-    pruneTouchedFull(files, srcKeys).touchedPaths
-
-  def pruneTouchedFull(files: Seq[DataFile], srcKeys: DataFrame): Prune = {
+  def pruneTouched(files: Seq[DataFile], srcKeys: DataFrame): Set[String] = {
     val spark = srcKeys.sparkSession
     import spark.implicits._
     planPrune(() => files.iterator, srcKeys,
-      () => spark.createDataset(files)).prune
+      () => spark.createDataset(files)).prune.touchedPaths
   }
 
   /** Pruning output plus what [[mergeInto]] plans with: the touched
@@ -132,18 +121,13 @@ object Merge {
     */
   val DefaultBoundsCap: Int = 1 << 17
 
-  /** Max per-gap cold output partitions before falling back to a single
-    * cold partition ([[mergeInto]]'s partCol): bounds the dynamic
-    * partition count of the rewrite write.
-    */
-  val MaxGapPartitions: Int = 64
-
   /** Source-row cap under which the anti join's key set broadcasts
     * (conf `graft.merge.broadcastKeyRows` overrides). Keys-only build
     * rows are ~50 bytes framed, so the default builds a ~100MB hash
     * relation — comfortably inside executor memory at any deployment
     * size, far under Spark's 8GB broadcast cap, and it removes the
-    * full-table exchange+sort from the rewrite (guide §3.1).
+    * full-table exchange+sort from the rewrite (guide §3.1). Above it
+    * the key set joins unhinted and adaptive execution picks the join.
     */
   val DefaultBroadcastKeyRows: Long = 2000000L
 
@@ -183,11 +167,11 @@ object Merge {
       }
     }
     if (total == 0L)
-      return PrunePlan(Prune(Set.empty, Array.empty, Array.empty), Nil, 0L)
+      return PrunePlan(Prune(Set.empty, Array.empty), Nil, 0L)
     if (!anyStatted) {
       // No stats anywhere: every file is touched (never prunable).
       val all = filesIt().toSeq
-      return PrunePlan(Prune(all.map(_.path).toSet, Array.empty, Array.empty),
+      return PrunePlan(Prune(all.map(_.path).toSet, Array.empty),
         all, total)
     }
     val fileBounds: Array[String] =
@@ -222,22 +206,6 @@ object Merge {
       .groupBy($"seg")
       .agg(min($"doc_id").as("lo"), max($"doc_id").as("hi"))
       .as[(Int, String, String)].collect()
-    // Refined endpoint set: file endpoints + actual key extents.
-    val bounds: Array[String] =
-      (fileBounds ++ segExtents.flatMap(r => Seq(r._2, r._3)))
-        .distinct.sorted(Search.utf8Ordering).toArray
-    val u8 = bounds.map(UTF8String.fromString)
-    // Hot refined segments: for each original hit segment, every refined
-    // segment between its key extents (inclusive — keys sit ON the new
-    // endpoints).
-    val hot = scala.collection.mutable.SortedSet.empty[Int]
-    segExtents.foreach { case (_, lo, hi) =>
-      val a = Search.upperBoundUtf8(u8, UTF8String.fromString(lo))
-      val b = Search.upperBoundUtf8(u8, UTF8String.fromString(hi))
-      var s = a
-      while (s <= b) { hot += s; s += 1 }
-    }
-    val hitSegs: Array[Int] = hot.toArray
     // Source-key extents sorted by lo (disjoint — per-segment min/max
     // of disjoint segments): the TIGHT file/row-group hot test.
     val extSorted = segExtents.map(r => (r._2, r._3))
@@ -254,7 +222,7 @@ object Merge {
       if (intersectsExtents(f.minDocId, f.maxDocId, extLoU8, extHiU8))
         touched += f
     }
-    PrunePlan(Prune(touched.map(_.path).toSet, bounds, hitSegs, extLo, extHi),
+    PrunePlan(Prune(touched.map(_.path).toSet, fileBounds, extLo, extHi),
       touched.toSeq, total)
   }
 
@@ -275,6 +243,24 @@ object Merge {
     val k = math.max(1L, math.ceil(n.toDouble / cap).toLong)
     eps.rdd.zipWithIndex().filter(_._2 % k == 0).map(_._1).collect()
       .sorted(Search.utf8Ordering)
+  }
+
+  /** Extent-aligned split points: the source-key extents, coarsened to
+    * at most `cap` clusters, each contributing [lo, succ(hi)) bounds —
+    * so HOT key ranges land in their own output files and every cold
+    * output's [min,max] provably excludes them. Without these, a small
+    * rewrite (one quantile range) emits one file spanning hot and cold
+    * rows alike, and the NEXT merge/delete over the same keys re-grazes
+    * all of it (PruningSpec pins this). succ(hi) = hi + '\u0000', the
+    * least string above hi in binary order, so every key past the
+    * extent's last one falls outside the hot range.
+    */
+  private[maintain] def extentClusterBounds(extLo: Array[String],
+      extHi: Array[String], cap: Int): Array[String] = {
+    val n = extLo.length
+    val step = math.max(1, (n + cap - 1) / cap)
+    (0 until n by step).flatMap(i =>
+      Seq(extLo(i), extHi(math.min(n - 1, i + step - 1)) + "\u0000")).toArray
   }
 
   def mergeInto(table: TokenTable, source: DataFrame,
@@ -313,170 +299,63 @@ object Merge {
     // collection hands over to distributed coarsening.
     val boundsCap = spark.conf.getOption("graft.merge.boundsCap")
       .map(_.toInt).getOrElse(DefaultBoundsCap)
-    val plan = planPrune(() => table.filesStream(parent),
+    val pruned = planPrune(() => table.filesStream(parent),
       srcKeys, () => table.files(parent), boundsCap,
       knownSrcCount = srcRows)
-    val prune = plan.prune
-    val touchedPaths = prune.touchedPaths
-    val touched = plan.touched
-    val untouchedCount = plan.totalFiles - touched.size
+    val prune = pruned.prune
+    val touched = pruned.touched
+    val untouchedCount = pruned.totalFiles - touched.size
 
-    // Hot/cold split gate: classify rows/row-groups only when the
-    // update is SPARSE relative to the touched data — if source keys
-    // cover most touched rows (dense update), "everything hot" is the
-    // correct degenerate answer and the classifier is pure per-row
-    // cost. Rows-based, so it needs no string-keyspace metric (extent
-    // arrays can be per-key singletons, which made any segment-count
-    // coverage ratio meaningless). Sound for rows of UNSTATTED files
-    // too: extents cover every source key, so a row outside all extents
-    // cannot equal any key no matter which file held it.
+    // Row-GROUP-level cold copy (below the file-level prune): groups
+    // intersecting no source-key extent carry into the new snapshot as a
+    // bytewise column-chunk copy — zero decode, zero re-encode — and
+    // only hot groups enter the rewrite. Planned only when the update is
+    // SPARSE relative to the touched rows: for a dense update
+    // "everything hot" is the right answer and the footer reads are
+    // pure cost.
     val touchedRows = touched.map(_.rows).sum
     val split = prune.extLo.nonEmpty && srcRows * 2 <= touchedRows
-
-    // Row-GROUP-level cold copy (below the file-level prune, above the
-    // row-level classifier): each touched file's row groups carry their
-    // own doc_id bounds, so groups intersecting no hot segment carry
-    // into the new snapshot as a bytewise column-chunk copy — zero
-    // decode, zero re-encode — and only hot groups enter the join
-    // rewrite. Fully-cold files (file-level prune was over-approximate)
-    // survive untouched with zero IO. Hot extracts are temporaries,
-    // deleted after the commit.
-    val coldDir = s"data/$jobId-v${parent.version}-cold"
-    val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-    val rgSplits: Seq[graft.table.RowGroupCopy.Split] =
-      if (split && touched.nonEmpty)
-        graft.table.RowGroupCopy.planAll(spark, table.location,
-          touched.map(_.path), coldDir, hotxDir, prune.extLo, prune.extHi)
-      else Nil
-    val byPathTouched = touched.map(f => f.path -> f).toMap
-    val fullyCold = rgSplits.filter(_.allCold).map(s => byPathTouched(s.origPath))
-    val coldFiles = rgSplits.flatMap(_.coldFiles)
-    val decodeRels: Seq[String] =
-      if (split) rgSplits.flatMap(_.decodeRel)
-      else touched.map(_.path)
-    val decodedBytes =
-      if (split) rgSplits.map(_.decodeBytes).sum
-      else touched.map(_.bytes).sum
+    val plan =
+      if (split) Rewrite.byExtents(table, jobId, parent, prune.extLo, prune.extHi, touched)
+      else Rewrite.decodeAll(touched)
 
     val target =
-      if (decodeRels.isEmpty)
+      if (plan.decodeRels.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physSchema)
       else spark.read.schema(physSchema)
-        .parquet(decodeRels.map(p => s"${table.location}/$p"): _*)
+        .parquet(plan.decodeRels.map(p => s"${table.location}/$p"): _*)
 
-    // --- the upsert ---
-    // JOIN STRATEGY (optimization guide §3.1): the anti join only needs
-    // the source's doc_id KEYS on its build side — ~tens of bytes per
-    // source row regardless of payload width. When the batch is bounded
-    // (srcRows <= graft.merge.broadcastKeyRows, default 2M keys ~100MB
-    // built), BROADCAST the key set: the touched data is then NEVER
-    // shuffled (the previous sort-merge plan exchanged and sorted every
-    // decoded byte — measured 2.4GB of shuffle for a 1.2GB table at
-    // bench scale — just to match ~15MB of keys). Catalyst won't pick
-    // this itself: the temp-view source's size estimate exceeds
+    // The upsert. The anti join needs only the source's doc_id KEYS on
+    // its build side. A bounded batch (srcRows <= broadcastKeyRows)
+    // BROADCASTS them, so the touched data is never shuffled for the
+    // join (a sort-merge plan measured 2.4GB of shuffle for a 1.2GB
+    // table at bench scale, to match ~15MB of keys); Catalyst would not
+    // pick this itself, as the cached source's size estimate exceeds
     // autoBroadcastJoinThreshold long before the key projection does.
-    // Unbounded batches keep the sort-merge path below, whose composite
-    // hot/cold key handles shuffle skew.
+    // Above the cap adaptive execution picks the join.
     val bcKeyRowsCap = spark.conf.getOption("graft.merge.broadcastKeyRows")
       .map(_.toLong).getOrElse(DefaultBroadcastKeyRows)
-    val useBroadcast = srcRows <= bcKeyRowsCap
-    val tv = s"graft_merge_target_${jobId.replaceAll("[^A-Za-z0-9_]", "_")}"
-    val sv = s"graft_merge_source_${jobId.replaceAll("[^A-Za-z0-9_]", "_")}"
-    if (!useBroadcast) src.createOrReplaceTempView(sv)
-    val merged =
-      if (useBroadcast) {
-        // No hot/cold row classifier needed: with a broadcast build
-        // side every row pays one hash probe — the classifier existed
-        // to keep cold rows out of the *shuffled* join and to bound its
-        // skew, both moot without an exchange.
-        target.join(broadcast(srcKeys), Seq("doc_id"), "left_anti")
-          .select(physFields.map(col): _*)
-          .unionByName(src.select(physFields.map(col): _*))
-      } else if (split) {
-        // Row-level hot test by EXTENT intersection (same tightness as
-        // the file/row-group test): idx = #(extent lows <= doc_id) via
-        // the codegen binary search; hot iff the greatest such extent
-        // also bounds the key from above. Tighter than hit-segment
-        // membership, which marked everything down to the previous file
-        // endpoint hot — rows provably outside every extent skip the
-        // anti join entirely.
-        val idx = SearchOps.bucketOfStr(col("doc_id"), prune.extLo)
-        // when() evaluates branches lazily per row — element_at never
-        // sees index 0 (an ANSI error).
-        val hotCol = when(idx >= 1,
-          col("doc_id") <= element_at(lit(prune.extHi), idx))
-          .otherwise(lit(false))
-        // Cold rows partition by which extent GAP they fall in ('c'+idx):
-        // a single cold partition would produce files whose [min,max]
-        // straddle the hot ranges (interval stats cannot express holes),
-        // and the NEXT merge over the same keys would re-touch them —
-        // per-gap files keep every cold output provably outside every
-        // extent. Gap count is bounded by the extent count; above
-        // MaxGapPartitions (an enormous update — file explosion risk)
-        // fall back to one cold partition and let the next merge re-prune.
-        val partCol =
-          if (prune.extLo.length <= MaxGapPartitions)
-            when(hotCol, lit("h"))
-              .otherwise(concat(lit("c"), idx.cast("string")))
-          else when(hotCol, lit("h")).otherwise(lit("c"))
-        target.withColumn("__part", partCol).createOrReplaceTempView(tv)
-        // Cold rows bypass the anti join via a COMPOSITE equi key
-        // (doc_id, hot-flag) against the source's constant flag 0: a
-        // cold row's (doc_id, 1) can never match, so it always survives
-        // — in ONE pass over the touched data. The earlier NULL-key
-        // bypass (CASE ... END with no ELSE) had a hash-skew trap: when
-        // cold rows dominate (tight extents + a wide touched set), every
-        // NULL key hashes to ONE shuffle partition and the sort-merge
-        // join serializes on a single task; the composite key keeps cold
-        // rows distributed by doc_id.
-        // Column lists come from the table schema (physical names), so
-        // evolved columns ride through the rewrite untouched.
-        val colsT = physFields.map(n => s"t.`$n`").mkString(", ")
-        val colsP = physFields.map(n => s"`$n`").mkString(", ")
-        spark.sql(
-          s"""SELECT $colsT, t.__part
-             |FROM $tv t LEFT ANTI JOIN (SELECT doc_id, 0 AS __k FROM $sv) s
-             |  ON t.doc_id = s.doc_id
-             | AND (CASE WHEN t.__part = 'h' THEN 0 ELSE 1 END) = s.__k
-             |UNION ALL
-             |SELECT $colsP, 'h' AS __part FROM $sv""".stripMargin)
-      } else {
-        target.createOrReplaceTempView(tv)
-        val colsT = physFields.map(n => s"t.`$n`").mkString(", ")
-        val colsP = physFields.map(n => s"`$n`").mkString(", ")
-        spark.sql(
-          s"""SELECT $colsT
-             |FROM $tv t LEFT ANTI JOIN $sv s ON t.doc_id = s.doc_id
-             |UNION ALL
-             |SELECT $colsP FROM $sv""".stripMargin)
-      }
+    val keys = if (srcRows <= bcKeyRowsCap) broadcast(srcKeys) else srcKeys
+    val merged = target.join(keys, Seq("doc_id"), "left_anti")
+      .select(physFields.map(col): _*)
+      .unionByName(src.select(physFields.map(col): _*))
 
-    // Placement of the rewrite output (broadcast path): without the
-    // sort-merge exchange the map-only rewrite would emit one file per
-    // scan task, each spanning its task's doc_id range — post-curve-
-    // clustering that is the FULL keyspace per file, so every later
-    // doc_id-keyed operation (ranged DELETE, the next merge) grazes
-    // every rewrite output. One explicit range exchange on sampled
-    // doc_id boundaries (the runByDocId machinery: exact hash-preimage
-    // placement, no RangePartitioning double-execution) restores tight
-    // per-file [min,max] — measured at bench scale it turns the
-    // following 2%-range delete from a ~1.1GB near-full rewrite into a
-    // pruned few-file one. The exchange moves only the DECODED bytes
-    // (cost tracks the update footprint, like the rest of the rewrite).
-    // Measured head-to-head at bench scale (MergeProbe, adjacent runs):
-    // exchange = merge 12.3-12.8s / next-delete 1.3s / 60 files;
-    // map-only partitionBy(8 ranges) = 11.8-17.0s / 1.6-2.4s / 568 files;
-    // no placement = 8.4s merge but 5.3-7.8s next-delete (full-range
-    // files defeat all later doc_id pruning); old sort-merge join =
-    // 23.2-23.5s / 6.6s. Range exchange is the overall winner and
-    // matches Iceberg's write.distribution-mode=range rationale
-    // (guide §6): one shuffle buys prunable layout AND right-sized files.
-    val placement = spark.conf.getOption("graft.merge.placement")
-      .getOrElse("exchange")
-    def rangeBounds(nOut: Int): Array[String] = {
+    // Placement: a map-only rewrite emits one file per scan task, each
+    // spanning the full keyspace after curve clustering, so every later
+    // doc_id-keyed op grazes every output. One range exchange on sampled
+    // doc_id bounds ∪ source-extent bounds (exact hash-preimage
+    // placement, as runByDocId) moves only the DECODED bytes and keeps
+    // per-file [min,max] tight. Round-6 A/B at bench scale: merge
+    // 12.3-12.8s / next-delete 1.3s, vs map-only range-partitioned files
+    // 11.8-17.0s / 1.6-2.4s (568 files) and no placement 8.4s / 5.3-7.8s.
+    val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
+    val nOut = math.max(1L, math.min(
+      (plan.decodedBytes + maxPart - 1) / math.max(1L, maxPart),
+      4L * spark.sessionState.conf.numShufflePartitions)).toInt
+    val rangeBounds: Array[String] = {
       val fraction = math.min(1.0, 200000.0 / math.max(1L, touchedRows))
       val sampleKeys =
-        if (nOut <= 1 || decodeRels.isEmpty) Array.empty[String]
+        if (nOut <= 1 || plan.decodeRels.isEmpty) Array.empty[String]
         else target.select($"doc_id")
           .sample(withReplacement = false, fraction, seed = 42L)
           .as[String].collect().sorted(Search.utf8Ordering)
@@ -486,104 +365,36 @@ object Merge {
           (i.toLong * sampleKeys.length / nOut).toInt.min(sampleKeys.length - 1)))
         .distinct.toArray
     }
-    // Extent-aligned split points: the source-key extents, coarsened to
-    // at most `cap` clusters, each contributing [lo, succ(hi)) bounds —
-    // so HOT key ranges land in their own output files and every cold
-    // output's [min,max] provably excludes them. Without these, a small
-    // rewrite (one quantile range) emits one file spanning hot and cold
-    // rows alike, and the NEXT merge/delete over the same keys re-grazes
-    // all of it (the tight-cold-stats invariant the round-4/5 split
-    // partitioning established; PruningSpec pins it). succ(hi) =
-    // hi + ' ' (a strict upper bound just above the extent's last
-    // key: a shorter string precedes its extensions in binary order).
-    def extentClusterBounds(cap: Int): Array[String] = {
-      val n = prune.extLo.length
-      if (n == 0) Array.empty
-      else {
-        val step = math.max(1, (n + cap - 1) / cap)
-        val b = Array.newBuilder[String]
-        var i = 0
-        while (i < n) {
-          b += prune.extLo(i)
-          b += prune.extHi(math.min(n - 1, i + step - 1)) + " "
-          i += step
-        }
-        b.result()
-      }
-    }
-    val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
-    val (rewriteDF, partCols) =
-      if (!useBroadcast) (merged, if (split) Seq("__part") else Nil)
-      else placement match {
-        case "none" => (merged, Nil)
-        case "exchange" =>
-          val nOut = math.max(1L, math.min(
-            (decodedBytes + maxPart - 1) / math.max(1L, maxPart),
-            4L * spark.sessionState.conf.numShufflePartitions)).toInt
-          val bounds = (rangeBounds(nOut) ++ extentClusterBounds(32))
-            .distinct.sorted(Search.utf8Ordering)
-          if (bounds.isEmpty) (merged, Nil)
-          else (Cluster.exchangeByPid(merged,
-            SearchOps.bucketOfStr(col("doc_id"), bounds), bounds.length + 1), Nil)
-        case _ => // "partition": map-only, dynamic range-partition files
-          val groups = spark.conf.getOption("graft.merge.rangeGroups")
-            .map(_.toInt).getOrElse(8)
-          val bounds = rangeBounds(groups)
-          if (bounds.isEmpty) (merged, Nil)
-          else (merged.withColumn("__part",
-            concat(lit("r"), SearchOps.bucketOfStr(col("doc_id"), bounds)
-              .cast("string"))), Seq("__part"))
-      }
+    val bounds = (rangeBounds ++ extentClusterBounds(prune.extLo, prune.extHi, 32))
+      .distinct.sorted(Search.utf8Ordering)
+    val rewriteDF =
+      if (bounds.isEmpty) merged
+      else Cluster.exchangeByPid(merged,
+        SearchOps.bucketOfStr(col("doc_id"), bounds), bounds.length + 1)
     // Plan-evidence hook (zero-cost unless GRAFT_PLAN_DUMP is set):
     // writes the rewrite's formatted physical plan so optimization
-    // claims are checkable offline against plans/r06/.
+    // claims are checkable offline.
     sys.env.get("GRAFT_PLAN_DUMP").foreach { d =>
-      val tag = if (!useBroadcast) "smj" else s"broadcast_$placement"
-      val p = java.nio.file.Paths.get(d, s"ns_merge_rewrite_$tag.txt")
+      val p = java.nio.file.Paths.get(d, "ns_merge_rewrite.txt")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, rewriteDF.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }
-    // Version-scoped output dir (same rationale as Compact/Cluster).
-    val out = table.writeDataFilesTo(rewriteDF, s"data/$jobId-v${parent.version}",
-      overwrite = true, sortBy = Some("doc_id"),
-      partitionBy = partCols)
-    Lineage.completeTask(table, Lineage.TaskRecord(
-      jobId, "merge", touched.map(_.path), out,
-      rows = out.map(_.rows).sum, tokenCount = out.map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
-    // Survivors = all - removed (untouched + fully-cold originals kept
-    // verbatim), plus bytewise cold copies and the rewrite's output —
-    // written without materializing the survivor list on the driver.
-    val removed = touchedPaths -- fullyCold.map(_.path)
-    val manifest = table.writeSurvivorManifest(parent, removed, coldFiles ++ out)
-    val snap = table.commit(Some(parent), "merge",
-      addManifests = Seq(manifest), keepManifests = Nil,
-      removedPaths = removed,
-      summary = Map(
+    val (snap, _) = Rewrite.commit(table, parent, jobId, "merge", touched, plan,
+        Some(rewriteDF)) { _ =>
+      Map(
         "source-rows" -> srcRows.toString,
         "touched-files" -> touched.size.toString,
         "untouched-files" -> untouchedCount.toString,
         "touched-bytes" -> touched.map(_.bytes).sum.toString,
-        "decoded-bytes" -> decodedBytes.toString,
-        "cold-copied-bytes" -> coldFiles.map(_.bytes).sum.toString,
-        "fully-cold-files" -> fullyCold.size.toString))
+        "fully-cold-files" -> plan.fullyCold.size.toString)
+    }
     src.unpersist()
     srcKeys.unpersist()
-    if (!useBroadcast) {
-      spark.catalog.dropTempView(tv)
-      spark.catalog.dropTempView(sv)
-    }
-    // Hot extracts served only the rewrite job: drop them now (orphan GC
-    // would also collect them, but leaving temporaries to GC hides bugs).
-    if (rgSplits.exists(s => !s.allCold && s.coldFiles.nonEmpty)) {
-      val hx = new org.apache.hadoop.fs.Path(s"${table.location}/$hotxDir")
-      hx.getFileSystem(spark.sessionState.newHadoopConf()).delete(hx, true)
-    }
     Result(snap, touched.size, untouchedCount.toInt, srcRows,
       touchedBytes = touched.map(_.bytes).sum,
-      decodedBytes = decodedBytes,
-      coldCopiedBytes = coldFiles.map(_.bytes).sum,
-      fullyColdFiles = fullyCold.size)
+      decodedBytes = plan.decodedBytes,
+      coldCopiedBytes = plan.coldCopiedBytes,
+      fullyColdFiles = plan.fullyCold.size)
   }
 }

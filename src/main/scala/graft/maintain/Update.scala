@@ -1,6 +1,5 @@
 package graft.maintain
 
-import graft.lineage.Lineage
 import graft.table.{DataFile, ManifestFileIndex, Snapshot, TokenTable}
 import org.apache.spark.sql.{Column, functions => F}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -119,9 +118,7 @@ object Update {
     // their bytes carry over verbatim and only the hot slice decodes
     // through the CASE projection. Cost tracks the UPDATED FOOTPRINT,
     // not grazed files.
-    val coldDir = s"data/$jobId-v${parent.version}-cold"
-    val hotxDir = s"data/$jobId-v${parent.version}-hotx"
-    val plan = Delete.planCold(table, cond, rw, coldDir, hotxDir)
+    val plan = Rewrite.byPredicate(table, jobId, parent, cond, rw)
     // Every grazed file fully cold: nothing can match — commit nothing.
     if (plan.decodeRels.isEmpty)
       return Result(parent, 0, untouched + rw.size, 0L, 0L)
@@ -145,29 +142,14 @@ object Update {
         case None => F.col(n)
       }
     }: _*)
-    val out = table.writeDataFilesTo(rewritten, s"data/$jobId-v${parent.version}",
-      overwrite = true, sortBy = Some("doc_id"))
-
-    Lineage.completeTask(table, Lineage.TaskRecord(
-      jobId, "update", rw.map(_.path), plan.coldFiles ++ out,
-      rows = (plan.coldFiles ++ out).map(_.rows).sum,
-      tokenCount = (plan.coldFiles ++ out).map(_.sumNtok).sum,
-      status = "done", durationMs = 0L))
-
-    val removed = rw.map(_.path).toSet -- plan.fullyCold.map(_.path)
-    val manifest = table.writeSurvivorManifest(parent, removed,
-      plan.coldFiles ++ out)
-    val snap = table.commit(Some(parent), "update",
-      addManifests = Seq(manifest), keepManifests = Nil,
-      removedPaths = removed,
-      summary = Map(
+    val (snap, _) = Rewrite.commit(table, parent, jobId, "update", rw, plan,
+        Some(rewritten)) { _ =>
+      Map(
         "updated-rows" -> updatedRows.toString,
         "rewritten-files" -> rw.size.toString,
         "untouched-files" -> untouched.toString,
-        "rewritten-bytes" -> rw.map(_.bytes).sum.toString,
-        "decoded-bytes" -> plan.decodedBytes.toString,
-        "cold-copied-bytes" -> plan.coldCopiedBytes.toString))
-    plan.dropHotExtracts(table, hotxDir)
+        "rewritten-bytes" -> rw.map(_.bytes).sum.toString)
+    }
     Result(snap, rw.size, untouched, updatedRows, rw.map(_.bytes).sum,
       decodedBytes = plan.decodedBytes,
       coldCopiedBytes = plan.coldCopiedBytes)

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 
 /** Row-group-level hot/cold split for MERGE rewrites.
   *
-  * A merge's file-level prune ([[graft.maintain.Merge.pruneTouchedFull]])
+  * A merge's file-level prune ([[graft.maintain.Merge.planPrune]])
   * marks whole files as touched, but a touched file's ROW GROUPS carry
   * their own doc_id min/max in the parquet footer — usually much tighter
   * than the file's. A row group whose [min,max] intersects no source-key

@@ -94,13 +94,6 @@ class TokenTable(val location: String, val spark: SparkSession) {
     */
   def scan(): DataFrame = scan(current)
 
-  /** Register the current snapshot as a temp view so SQL text queries
-    * (`spark.sql("SELECT ... FROM name")`, the merge rewrite, ad-hoc
-    * analysis) compile against the table through Spark SQL.
-    */
-  def registerView(name: String): Unit =
-    scanLogical().createOrReplaceTempView(name)
-
   /** Manifest-streamed scan: a [[ManifestFileIndex]]-backed relation —
     * no filesystem listing, no driver path collect; file statuses come
     * from manifest rows and data filters prune files inside the planner
@@ -218,13 +211,12 @@ class TokenTable(val location: String, val spark: SparkSession) {
 
   /** Write to an explicit table-relative dir. Overwrite mode makes
     * resumed lineage tasks idempotent (a partially-written task dir from
-    * a crash is simply replaced on re-run). `partitionBy` splits rows
-    * into per-value subdirectory FILES (the columns are dropped from
-    * the data, Hive-style) — Merge uses it to give hot and cold row
-    * ranges separate files so their manifest stats stay tight.
+    * a crash is simply replaced on re-run). `sortBy` orders rows within
+    * each output file (tight row-group doc_id bounds); file placement is
+    * the caller's: one output file per partition of `df`.
     */
   def writeDataFilesTo(df: DataFrame, relDir: String, overwrite: Boolean,
-      sortBy: Option[String], partitionBy: Seq[String] = Nil): Seq[DataFile] = {
+      sortBy: Option[String]): Seq[DataFile] = {
     val abs = s"$location/$relDir"
     // ONE canonical parquet repetition layout for every engine write:
     // Spark derives parquet required/optional from column nullability,
@@ -258,16 +250,8 @@ class TokenTable(val location: String, val spark: SparkSession) {
       }
       if (widenedAny) df.select(cols.toIndexedSeq: _*) else df
     }
-    // Partition columns lead the within-partition sort: FileFormatWriter
-    // requires ordering by partition columns and would otherwise inject
-    // its own SortExec (a full re-sort that also destroys the data-column
-    // order inside each output file).
-    val sortCols = partitionBy ++ sortBy
-    val out =
-      if (sortCols.nonEmpty)
-        dfCanon.sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      else dfCanon
-    val writer = out.write
+    val out = sortBy.fold(dfCanon)(c => dfCanon.sortWithinPartitions(c))
+    out.write
       .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
       .option("compression", "zstd") // reference writes ZSTD parquet (src/pipeline/mod.rs:120-122)
       // Bounded row groups (vs parquet's 128MB default): with doc_id-
@@ -279,7 +263,6 @@ class TokenTable(val location: String, val spark: SparkSession) {
       .option("parquet.block.size",
         spark.conf.getOption("graft.write.rowGroupBytes")
           .getOrElse(TokenTable.RowGroupBytes.toString))
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(abs)
     statsFor(relDir)
   }

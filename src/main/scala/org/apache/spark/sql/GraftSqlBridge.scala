@@ -21,6 +21,13 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until the listener bus has delivered every event posted so
+    * far (the drain is private[spark]): query-execution listeners run on
+    * that bus, after the action that fired them has returned.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a temp SQL function backed by a native expression builder,
     * so `spark.sql("... z_interleave(a, b, c) ...")` plans the codegen'd
     * expression directly.

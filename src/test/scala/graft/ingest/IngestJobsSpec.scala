@@ -1,11 +1,10 @@
 package graft.ingest
 
-import graft.SparkSpec
+import graft.{PlanAudit, SparkSpec}
 import graft.table.TokenTable
-import org.apache.spark.TestBus
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -28,16 +27,6 @@ class IngestJobsSpec extends SparkSpec {
       RawMessage("t", i % 2, i.toLong, Some(s"k$i"), v)
     }.toDS()
 
-  /** Every physical node an executed query ran, through adaptive
-    * wrappers and query stages; a cache scan is a leaf, so the cached
-    * plan under it is not included.
-    */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case s: QueryStageExec => s +: nodes(s.plan)
-    case other => other +: other.children.flatMap(nodes)
-  }
-
   test("a steady-state batch runs at most 6 jobs off one classified cache") {
     val t = TokenTable.create(spark, tmpDir("ingest-jobs"))
     Ingest.ingestBatch(t, batch(0 until 200))
@@ -50,7 +39,7 @@ class IngestJobsSpec extends SparkSpec {
         queries.add(qe)
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    TestBus.drain(sc)
+    GraftSqlBridge.drainListenerBus(spark)
     spark.listenerManager.register(qel)
     // Offsets 190..389: ten replayed messages, so the watermark join runs.
     val res =
@@ -59,7 +48,7 @@ class IngestJobsSpec extends SparkSpec {
         try Ingest.ingestBatch(t, batch(190 until 390))
         finally sc.clearJobGroup()
       } finally {
-        TestBus.drain(sc)
+        GraftSqlBridge.drainListenerBus(spark)
         spark.listenerManager.unregister(qel)
       }
     // Offsets 222, 259, 296, 333 and 370 are malformed.
@@ -69,7 +58,7 @@ class IngestJobsSpec extends SparkSpec {
     assert(jobs.length <= 6, s"${jobs.length} jobs for one steady-state batch")
 
     val ran = queries.toArray(Array.empty[QueryExecution]).toSeq
-      .map(qe => nodes(qe.executedPlan))
+      .map(qe => PlanAudit.planNodes(qe.executedPlan))
     // Every scan of one cached frame shares that frame's cached plan.
     def cacheScans(ns: Seq[SparkPlan]): Seq[SparkPlan] = ns.collect {
       case s: InMemoryTableScanExec => s.relation.cachedPlan
@@ -83,7 +72,7 @@ class IngestJobsSpec extends SparkSpec {
     val cachedPlan = caches.head.head
     assert(caches.flatten.forall(_ eq cachedPlan), "one cached frame per batch")
     def parses(p: SparkPlan) = p.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))
-    assert(nodes(cachedPlan).exists(parses), "the cache holds the parsed batch")
+    assert(PlanAudit.planNodes(cachedPlan).exists(parses), "the cache holds the parsed batch")
     assert(!ran.flatten.exists(parses), "no query may re-parse the batch outside the cache")
   }
 }

@@ -1,12 +1,17 @@
 package graft.maintain
 
-import graft.SparkSpec
+import graft.{PlanAudit, SparkSpec}
 import graft.ingest.TokenGen
 import graft.table.TokenTable
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
-/** Plan-shape guards for the merge rewrite: ONE scan of touched data,
-  * no writer-injected re-sort, broadcast anti join.
+/** Plan-shape guards for the merge rewrite, read off the executed plan
+  * of the write `mergeInto` actually runs: ONE scan of touched data, a
+  * broadcast anti join, and one Exchange (the range placement).
   */
 class MergePlanSpec extends SparkSpec {
   import spark.implicits._
@@ -18,51 +23,28 @@ class MergePlanSpec extends SparkSpec {
       t.append(TokenGen.asTokenRows(TokenGen.generate(
         spark, 2000, idOffset = i * 2000L, numPartitions = 2)))
     }
-    val all = t.filesLocal(t.current)
     val src = t.scan().filter(pmod(xxhash64($"doc_id"), lit(10)) === 0)
       .select($"doc_id", $"tokens", $"n_tok", $"source")
-    val prune = Merge.pruneTouchedFull(all, src.select($"doc_id"))
-    // Reproduce mergeInto's merged plan (same SQL text) and count the
-    // parquet scans of touched data in the final physical plan.
-    val touched = all.filter(f => prune.touchedPaths.contains(f.path))
-    val target = spark.read.schema(t.schema)
-      .parquet(touched.map(f => s"$dir/${f.path}"): _*)
-    val idx = graft.functions.SearchOps.bucketOfStr(col("doc_id"), prune.extLo)
-    val part = when(idx >= 1,
-      when(col("doc_id") <= element_at(lit(prune.extHi), idx), "h").otherwise("c"))
-      .otherwise(lit("c"))
-    target.withColumn("__part", part).createOrReplaceTempView("mp_t")
-    src.createOrReplaceTempView("mp_s")
-    val merged = spark.sql(
-      """SELECT t.doc_id, t.tokens, t.n_tok, t.source, t.__part
-        |FROM mp_t t LEFT ANTI JOIN (SELECT doc_id, 0 AS __k FROM mp_s) s
-        |  ON t.doc_id = s.doc_id
-        | AND (CASE WHEN t.__part = 'h' THEN 0 ELSE 1 END) = s.__k
-        |UNION ALL
-        |SELECT doc_id, tokens, n_tok, source, 'h' AS __part FROM mp_s""".stripMargin)
-    val plan = merged.queryExecution.executedPlan.toString
-    // Exactly ONE scan of the touched files (the union's second branch
-    // scans the SOURCE relation, whose files are the table's too here,
-    // so count scans mentioning the touched dirs' parent):
-    val scans = "BroadcastHashJoin .*LeftAnti|BroadcastNestedLoopJoin".r
-      .findAllIn(plan).toSeq
-    assert(plan.contains("LeftAnti"), plan.take(2000))
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      "anti join must stay an equi hash join despite the composite CASE key")
-    // Catalyst constant-folds the composite (doc_id, flag) key into the
-    // IDEAL form: plain doc_id equi keys plus `(__part = h)` as a
-    // residual join condition — every row (hot or cold) hashes by real
-    // doc_id (no NULL-key skew partition), and cold rows survive the
-    // anti join because the residual never holds for them.
-    assert("LeftAnti, BuildRight, \\(__part".r.findFirstIn(plan).isDefined ||
-      plan.contains("__k"),
-      s"anti join must carry the hot-flag as residual or equi key:\n${plan.take(1200)}")
-    assert(!plan.contains("CASE WHEN") ||
-      !"""LeftAnti[^\n]*CASE WHEN""".r.findFirstIn(plan).isDefined,
-      "join keys must not contain a NULL-producing CASE expression")
-    // The rewrite itself: correctness end-to-end via mergeInto.
+      .withColumn("__p", lit(0L))
     val before = t.scan().count()
-    val res = Merge.mergeInto(t, src.withColumn("__p", lit(0L)), "__p", "mp-m")
+    var res: Merge.Result = null
+    val writes = PlanAudit.capturedWrites(spark) {
+      res = Merge.mergeInto(t, src, "__p", "mp-m")
+    }
+    assert(writes.size == 1, s"one data-file write expected, got ${writes.size}")
+    val plan = writes.head.executedPlan
+    val all = PlanAudit.planNodes(plan)
+    val scans = all.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"exactly one parquet scan (the touched files):\n$plan")
+    assert(scans.head.relation.location.rootPaths.forall(_.toString.contains(dir)),
+      s"the scan must read this table's files:\n$plan")
+    assert(all.exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+      case _ => false
+    }, s"anti join must broadcast the source keys:\n$plan")
+    assert(!all.exists(_.nodeName.contains("NestedLoop")), plan.toString)
+    assert(all.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
+      s"exactly one Exchange (the range placement):\n$plan")
     assert(t.scan().count() == before) // pure updates: row count unchanged
     assert(res.touchedFiles > 0)
   }

@@ -88,6 +88,10 @@ class PruningSpec extends SparkSpec {
 
     val r1 = Merge.mergeInto(t, updates(5), "__p", "mb-m1")
     assert(r1.touchedFiles >= 1)
+    assert(graft.lineage.Lineage.taskRecords(t, "mb-m1").map(_.durationMs) match {
+      case Seq(ms) => ms > 0
+      case _ => false
+    }, "the merge's lineage task records its real write time")
     // After the hot/cold split, the cold carry-over files have tight
     // stats; merging the SAME range again must touch only the small hot
     // files.
