@@ -398,8 +398,6 @@ object Bench {
     }
   }
 
-  def wipeDir(dir: String): Unit = wipe(dir)
-
   private def wipe(dir: String): Unit = {
     val p = java.nio.file.Paths.get(dir)
     if (java.nio.file.Files.exists(p)) {

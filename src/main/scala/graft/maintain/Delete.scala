@@ -113,19 +113,9 @@ object Delete {
       else {
         val paths = plan.decodeRels.map(p => s"${table.location}/$p")
         import org.apache.spark.sql.functions.{coalesce, lit}
-        val df = spark.read.schema(graft.table.Format.schemaOf(parent))
+        Some(spark.read.schema(graft.table.Format.schemaOf(parent))
           .parquet(paths: _*)
-          .filter(!coalesce(predicate, lit(false)))
-        sys.env.get("GRAFT_PLAN_DUMP").foreach { d =>
-          val p = java.nio.file.Paths.get(d, "ns_delete_rewrite.txt")
-          java.nio.file.Files.createDirectories(p.getParent)
-          java.nio.file.Files.writeString(p,
-            s"decode files: ${plan.decodeRels.size} of ${untouched + drop.size + rw.size}" +
-              s" total; decoded bytes: ${plan.decodedBytes}\n" +
-              df.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode))
-        }
-        Some(df)
+          .filter(!coalesce(predicate, lit(false))))
       }
     commitDelete(table, parent, jobId, drop, rw, untouched, plan, survivors)
   }

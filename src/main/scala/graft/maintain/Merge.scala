@@ -371,15 +371,6 @@ object Merge {
       if (bounds.isEmpty) merged
       else Cluster.exchangeByPid(merged,
         SearchOps.bucketOfStr(col("doc_id"), bounds), bounds.length + 1)
-    // Plan-evidence hook (zero-cost unless GRAFT_PLAN_DUMP is set):
-    // writes the rewrite's formatted physical plan so optimization
-    // claims are checkable offline.
-    sys.env.get("GRAFT_PLAN_DUMP").foreach { d =>
-      val p = java.nio.file.Paths.get(d, "ns_merge_rewrite.txt")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, rewriteDF.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
     val (snap, _) = Rewrite.commit(table, parent, jobId, "merge", touched, plan,
         Some(rewriteDF)) { _ =>
       Map(

@@ -22,11 +22,10 @@ import org.apache.spark.sql.functions._
   * at any scale the edge list itself fits.
   *
   * Implementation notes for the iterative loop:
-  *  - each round ends in `localCheckpoint(eager)` — iterating
-  *    DataFrames without cutting lineage re-analyzes an
+  *  - each round ends in an eager lineage cut ([[materialize]]) —
+  *    iterating DataFrames without cutting lineage re-analyzes an
   *    exponentially-growing plan (the classic iterative-Catalyst trap);
-  *    on a real cluster this becomes `checkpoint` against the
-  *    cluster FS for executor-loss tolerance,
+  *    it is a reliable `checkpoint` when a checkpoint dir is set,
   *  - convergence is detected by an order-insensitive edge-set
   *    checksum (count + sum of per-edge xxhash64) — two scalars per
   *    round, not a full edge-set comparison.
@@ -39,29 +38,21 @@ object Components {
     * dropped.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    val spark = pairs.sparkSession
-    // Lineage cut per round: `localCheckpoint` holds round state in
-    // executor block storage — fast, but lost with an executor. When the
-    // session has a reliable checkpoint dir configured
-    // (`sc.setCheckpointDir`, cluster FS), use a real `checkpoint`
-    // instead so a mid-iteration executor loss replays from durable
+    // Lineage cut per round through [[materialize]]: with a reliable
+    // checkpoint dir a mid-iteration executor loss replays from durable
     // storage rather than failing the job — the production setting for
     // multi-hour CC runs over web-scale edge lists.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-
     val init = pairs
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
 
-    var edges = cut(init)
+    var edges = materialize(init)
     var lastSig: (Long, Long) = (-1L, 0L)
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val next = cut(smallStar(largeStar(edges)))
+      val next = materialize(smallStar(largeStar(edges)))
       // pmod keeps the ANSI-mode sum far from Long overflow (same
       // trick as SparkSpec.checksum): edge hashes are full-range longs.
       val sigRow = next.agg(

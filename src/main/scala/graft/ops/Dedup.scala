@@ -27,16 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Materialize a subtree consumed by more than one downstream branch
-    * (guide §5: cache when reused AND recompute is expensive).
-    * localCheckpoint = eager MEMORY_AND_DISK blocks + lineage cut;
-    * blocks free via the ContextCleaner once the result is dropped.
-    * `graft.ops.materialize=off` disables (A/B measurement knob).
-    */
-  private[ops] def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption("graft.ops.materialize").contains("off")) df
-    else df.localCheckpoint(true)
-
   /** 2^31-1 (Mersenne prime): modulus of the minhash permutation family. */
   val P: Long = 2147483647L
 
@@ -430,7 +420,7 @@ object Dedup {
     // so a rare colliding pair can mark two different windows as shared.
     // Within-doc distinctness is still computed on the exact strings.
     // NOT materialized: the double window-explode is cheaper than an
-    // eager checkpoint barrier here (QueryProbe A/B: 0.53s recompute vs
+    // eager checkpoint barrier here (measured A/B: 0.53s recompute vs
     // 0.66s materialized at bench scale) — the hashed 8-byte rows make
     // the recomputed exchange cheap, and the original skew argument for
     // explode-per-side stands at scale.

@@ -85,13 +85,12 @@ object LmScore {
     // Materialized (<= V rows): vocab otherwise recomputes its full
     // corpus word-explode + aggregate THREE times — once for the vsize
     // count and once per broadcast build (v1, v2).
-    val vocab = ws
+    val vocab = materialize(ws
       .select(explode(col("ws")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("word"))
       .limit(vocabCap)
-      .select(col("word"))
-      .localCheckpoint(true)
+      .select(col("word")))
     // Successor-space size for add-one smoothing: |vocab| + 1 (unk).
     // O(1)-row driver action on a capped aggregate.
     val vsize = vocab.count() + 1L
@@ -146,7 +145,7 @@ object LmScore {
       .select(col("doc_id"), col("n_big"),
         call_function("div", col("stot"), col("n_big")).as("bits_1k"))
     // Materialize before releasing the shared intermediate.
-    val out = scored.localCheckpoint(true)
+    val out = materialize(scored)
     docBig.unpersist()
     out
   }

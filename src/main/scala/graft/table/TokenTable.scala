@@ -40,11 +40,11 @@ class TokenTable(val location: String, val spark: SparkSession) {
         .parquet(s.manifests.map(m => s"$location/$m"): _*)
         .as[DataFile]
 
-  /** Driver-side file list for planning tools (audits, bench sizing).
+  /** Driver-side file list, read off [[filesStream]] with no Spark job.
     * Maintenance jobs should use [[filesStream]] / [[writeSurvivorManifest]]
     * instead — this materializes the full inventory.
     */
-  def filesLocal(s: Snapshot): Seq[DataFile] = files(s).collect().toSeq
+  def filesLocal(s: Snapshot): Seq[DataFile] = filesStream(s).toSeq
 
   /** STREAM the snapshot's manifest rows on the driver, one row at a
     * time ([[Manifests.readLocal]]) — O(1) memory regardless of file
@@ -70,16 +70,19 @@ class TokenTable(val location: String, val spark: SparkSession) {
     */
   def writeSurvivorManifest(parent: Snapshot, removedPaths: Set[String],
       extra: Seq[DataFile]): String = {
-    // Counting pass (drained fully — readLocal closes at exhaustion);
-    // O(1) memory, O(#files) metadata CPU.
+    // One streamed pass buffers survivors while the parent's row count
+    // stays within the threshold; past it the stream is abandoned
+    // (closed) for the distributed branch.
     var n = 0L
+    val survivors = Seq.newBuilder[DataFile]
     val it = filesStream(parent)
-    while (it.hasNext) { it.next(); n += 1 }
-    if (n <= ManifestDistributeThreshold) {
-      val survivors = filesStream(parent)
-        .filterNot(f => removedPaths.contains(f.path)).toSeq
-      writeManifest(survivors ++ extra)
-    } else {
+    while (n <= ManifestDistributeThreshold && it.hasNext) {
+      val f = it.next(); n += 1
+      if (!removedPaths.contains(f.path)) survivors += f
+    }
+    if (n <= ManifestDistributeThreshold) writeManifest(survivors.result() ++ extra)
+    else {
+      it.close()
       import spark.implicits._
       val removedDS = spark.createDataset(removedPaths.toSeq).toDF("path")
       val survivors = files(parent)

@@ -5,8 +5,8 @@ import graft.table.TokenTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Physical-plan regression guards: the properties PLANS.md records by
-  * eyeballing `PlanAudit` output, asserted in CI. A change that
+/** Physical-plan regression guards: the properties PLANS.md records,
+  * asserted in CI. A change that
   * silently adds a shuffle, loses parquet filter pushdown, or degrades
   * a join to a nested loop fails here even though results stay correct.
   *
@@ -157,5 +157,33 @@ class PlanRegressionSpec extends SparkSpec {
     // In compact plan strings the whole-stage-codegen marker is the
     // "*(n)" stage prefix on the operator.
     assert("""\*\(\d+\) Project""".r.findFirstIn(plan(df)).isDefined, plan(df))
+  }
+
+  private lazy val table: TokenTable = {
+    val t = TokenTable.create(spark, tmpDir("planreg_stats"))
+    t.append(TokenGen.asTokenRows(TokenGen.generate(spark, 2000, numPartitions = 2)))
+    t
+  }
+
+  test("stats sum scan reads only n_tok") {
+    val df = table.scan().agg(sum($"n_tok"))
+    assert(plan(df).contains("ReadSchema: struct<n_tok:int>"), plan(df))
+  }
+
+  test("bucket assignment binary search stays in one whole-stage codegen span") {
+    val df = table.scan().select(graft.functions.SearchOps.bucketOfStr(
+      $"doc_id", Array("doc_000000000500", "doc_000000001000")).as("b"))
+    assert("""\*\(\d+\) Project""".r.findFirstIn(plan(df)).isDefined, plan(df))
+  }
+
+  test("merge-pruning distinct segment aggregate plans no join") {
+    val bounds = table.filesLocal(table.current)
+      .flatMap(f => Seq(f.minDocId, f.maxDocId)).distinct
+      .sorted(graft.functions.Search.utf8Ordering).toArray
+    val df = table.scan()
+      .select(graft.functions.SearchOps.bucketOfStr($"doc_id", bounds).as("seg"))
+      .distinct()
+    assert(!plan(df).contains("Join"), plan(df))
+    assert(plan(df).contains("HashAggregate"), plan(df))
   }
 }

@@ -1,8 +1,9 @@
 package graft.maintain
 
-import graft.{PlanAudit, SparkSpec}
+import graft.{PlanAudit, PlanDumpListener, SparkSpec}
 import graft.ingest.TokenGen
 import graft.table.TokenTable
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -28,9 +29,15 @@ class MergePlanSpec extends SparkSpec {
       .withColumn("__p", lit(0L))
     val before = t.scan().count()
     var res: Merge.Result = null
-    val writes = PlanAudit.capturedWrites(spark) {
-      res = Merge.mergeInto(t, src, "__p", "mp-m")
-    }
+    // The outside-in plan dump, registered on this session for the merge.
+    val dumpDir = java.nio.file.Files.createTempDirectory("mplan_dump")
+    val dump = new PlanDumpListener(
+      new SparkConf(false).set("spark.graft.planDumpDir", dumpDir.toString))
+    spark.listenerManager.register(dump)
+    val writes =
+      try PlanAudit.capturedWrites(spark) {
+        res = Merge.mergeInto(t, src, "__p", "mp-m")
+      } finally spark.listenerManager.unregister(dump)
     assert(writes.size == 1, s"one data-file write expected, got ${writes.size}")
     val plan = writes.head.executedPlan
     val all = PlanAudit.planNodes(plan)
@@ -45,6 +52,10 @@ class MergePlanSpec extends SparkSpec {
     assert(!all.exists(_.nodeName.contains("NestedLoop")), plan.toString)
     assert(all.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
       s"exactly one Exchange (the range placement):\n$plan")
+    val dumped = dumpDir.toFile.listFiles().toSeq
+    assert(dumped.size == 1, s"one plan file per data-file write: $dumped")
+    val text = java.nio.file.Files.readString(dumped.head.toPath)
+    assert(text.contains("BroadcastHashJoin") && text.contains("LeftAnti"), text)
     assert(t.scan().count() == before) // pure updates: row count unchanged
     assert(res.touchedFiles > 0)
   }

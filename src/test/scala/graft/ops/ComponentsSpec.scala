@@ -109,11 +109,17 @@ class ComponentsSpec extends SparkSpec {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // The checkpointed round state actually landed in the durable dir.
     import scala.jdk.CollectionConverters._
-    val entries = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .iterator().asScala.count(java.nio.file.Files.isRegularFile(_))
-    assert(entries > 0, "reliable checkpoint wrote nothing")
+    def entries(): Long = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .iterator().asScala.count(java.nio.file.Files.isRegularFile(_)).toLong
+    val afterCc = entries()
+    assert(afterCc > 0, "reliable checkpoint wrote nothing")
+    // Every op's lineage cut goes through the same helper: the LM
+    // scorer's vocab and output cuts land in the durable dir too.
+    val scored = LmScore.score(Seq((1L, "a b c a"), (2L, "b c d")).toDF("doc_id", "text"))
+    assert(scored.count() == 2)
+    assert(entries() > afterCc, "LmScore.score did not use the reliable checkpoint")
     // NOTE: SparkContext has no public un-set for the checkpoint dir;
-    // later CC runs in this JVM simply keep using the reliable path
+    // later op runs in this JVM simply keep using the reliable path
     // (also correct — the localCheckpoint path is covered by every test
     // that ran before this one).
   }

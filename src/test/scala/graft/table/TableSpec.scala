@@ -59,6 +59,19 @@ class TableSpec extends SparkSpec {
     assert(files.map(_.rows).sum == 1000L)
   }
 
+  test("filesLocal reads the inventory on the driver: zero Spark jobs") {
+    val t = TokenTable.create(spark, tmpDir("tbl"))
+    t.append(TokenGen.asTokenRows(TokenGen.generate(spark, 300, numPartitions = 3)))
+    val sc = spark.sparkContext
+    val group = s"files-local-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "filesLocal")
+    val files =
+      try t.filesLocal(t.current)
+      finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    assert(files.map(_.rows).sum == 300L)
+  }
+
   test("manifest stats enable doc_id pruning") {
     val dir = tmpDir("tbl")
     val t = TokenTable.create(spark, dir)
