@@ -208,15 +208,16 @@ object Ingest {
     // per-partition when()-chain, whose expression tree is
     // O(#topic-partitions) and collapses codegen at a few thousand
     // partitions, nor a map literal, whose lookup scans its keys per row.
-    val flagged =
-      if (wm.isEmpty) msgs.withColumn("__replay", lit(false))
-      else {
-        val wmDf = wm.toSeq.toDF("__tp", "__wm")
-        msgs.withColumn("__tp", concat_ws("/", $"topic", $"partition"))
-          .join(broadcast(wmDf), Seq("__tp"), "left")
-          .withColumn("__replay", coalesce($"offset" <= $"__wm", lit(false)))
-          .drop("__tp", "__wm")
-      }
+    // The build side always holds a sentinel row no "topic/partition"
+    // key matches, so a table's first batch (no watermarks yet) runs the
+    // same plan and generated code as every later batch: an empty build
+    // side would let the optimizer drop the join, and the next batch
+    // would compile and warm up a second pipeline.
+    val wmDf = (wm.toSeq :+ ("" -> Long.MinValue)).toDF("__tp", "__wm")
+    val flagged = msgs.withColumn("__tp", concat_ws("/", $"topic", $"partition"))
+      .join(broadcast(wmDf), Seq("__tp"), "left")
+      .withColumn("__replay", coalesce($"offset" <= $"__wm", lit(false)))
+      .drop("__tp", "__wm")
     val batch = classify(flagged).cache()
     try ingestFresh(table, batch, parent, deadLetterDir)
     finally batch.unpersist()

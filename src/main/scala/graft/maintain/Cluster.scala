@@ -95,6 +95,9 @@ object Cluster {
     new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
 
   def hashPreimages(spark: SparkSession, n: Int): Array[Long] = {
+    // One partition: every key lands in it, and 0 is the least
+    // candidate the probe would find. No job.
+    if (n == 1) return Array(0L)
     val memo = preimageMemo.get(n)
     if (memo != null) return memo
     val computed = computePreimages(spark, n)
@@ -330,24 +333,30 @@ object Cluster {
 
     // Bounded sample IO (same rationale as the curve path): pick at
     // most SampleFileCap of the REWRITE files (carried files are not in
-    // this layout pass) and sample doc_ids from those alone.
-    val sampleCap = spark.conf.getOption("graft.cluster.sampleFiles")
-      .map(_.toInt).getOrElse(SampleFileCap)
-    val (samplePaths, sampleRows) = {
-      val it = table.filesStream(parent).filterNot(f => carriedPaths.contains(f.path))
-      pickSampleFiles(it, nRewrite, sampleCap)
-    }
-    val sampleScan =
-      if (samplePaths.isEmpty) input
-      else spark.read.schema(graft.table.Format.schemaOf(parent))
-        .parquet(samplePaths.map(p => s"${table.location}/$p"): _*)
-    val fraction = math.min(1.0, 200000.0 / math.max(1L, sampleRows))
-    // Sort with Spark's UTF-8 binary string order, NOT Java's UTF-16
-    // order — they disagree on supplementary-plane characters, and the
-    // executor-side bucket comparison is UTF-8.
-    val sampleKeys = sampleScan.select($"doc_id")
-      .sample(withReplacement = false, fraction, seed = 42L)
-      .as[String].collect().sorted(Search.utf8Ordering)
+    // this layout pass) and sample doc_ids from those alone. Sort with
+    // Spark's UTF-8 binary string order, NOT Java's UTF-16 order — they
+    // disagree on supplementary-plane characters, and the executor-side
+    // bucket comparison is UTF-8. One bucket needs no boundary and
+    // cannot be salted (its sample share is the mean), so it skips the
+    // sample job.
+    val sampleKeys: Array[String] =
+      if (buckets == 1) Array.empty
+      else {
+        val sampleCap = spark.conf.getOption("graft.cluster.sampleFiles")
+          .map(_.toInt).getOrElse(SampleFileCap)
+        val (samplePaths, sampleRows) = {
+          val it = table.filesStream(parent).filterNot(f => carriedPaths.contains(f.path))
+          pickSampleFiles(it, nRewrite, sampleCap)
+        }
+        val sampleScan =
+          if (samplePaths.isEmpty) input
+          else spark.read.schema(graft.table.Format.schemaOf(parent))
+            .parquet(samplePaths.map(p => s"${table.location}/$p"): _*)
+        val fraction = math.min(1.0, 200000.0 / math.max(1L, sampleRows))
+        sampleScan.select($"doc_id")
+          .sample(withReplacement = false, fraction, seed = 42L)
+          .as[String].collect().sorted(Search.utf8Ordering)
+      }
     val boundaries: Array[String] =
       if (sampleKeys.isEmpty) Array.empty
       else (1 until buckets)

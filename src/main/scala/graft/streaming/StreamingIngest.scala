@@ -162,9 +162,14 @@ object StreamingIngest {
     * ceiling, all but `retainVersions` snapshots expire and unreachable
     * files older than the grace window are collected — so a stream that
     * runs for months keeps bounded metadata and storage, not one
-    * snapshot per micro-batch forever. Serialized with ingest inside
-    * foreachBatch; a CAS race is impossible here (expiry commits no
-    * snapshot), and reachability math protects any retained reader.
+    * snapshot per micro-batch forever. A streaming table's inventory
+    * stays small after compaction, so the pass runs on the driver with
+    * no Spark job (Expire's driver branch: the retained manifests are
+    * streamed and the table dir is listed); only a table past
+    * `ManifestDistributeThreshold` paths pays the distributed walk.
+    * Serialized with ingest inside foreachBatch; a CAS race is
+    * impossible here (expiry commits no snapshot), and reachability
+    * math protects any retained reader.
     */
   def maybeExpire(table: TokenTable, policy: MaintenancePolicy)
       : Option[graft.maintain.Expire.Result] = {

@@ -4,9 +4,11 @@ import graft.{PlanAudit, SparkSpec}
 import graft.table.TokenTable
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Job-count regression for the ingest hot path: a steady-state batch
@@ -27,12 +29,10 @@ class IngestJobsSpec extends SparkSpec {
       RawMessage("t", i % 2, i.toLong, Some(s"k$i"), v)
     }.toDS()
 
-  test("a steady-state batch runs at most 6 jobs off one classified cache") {
-    val t = TokenTable.create(spark, tmpDir("ingest-jobs"))
-    Ingest.ingestBatch(t, batch(0 until 200))
-
-    val sc = spark.sparkContext
-    val group = s"ingest-jobs-${java.util.UUID.randomUUID()}"
+  /** Runs `body` and returns the physical plan nodes of every query it
+    * executed, in order.
+    */
+  private def plansOf[A](body: => A): (A, Seq[Seq[SparkPlan]]) = {
     val queries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val qel = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -41,28 +41,39 @@ class IngestJobsSpec extends SparkSpec {
     }
     GraftSqlBridge.drainListenerBus(spark)
     spark.listenerManager.register(qel)
-    // Offsets 190..389: ten replayed messages, so the watermark join runs.
-    val res =
-      try {
-        sc.setJobGroup(group, "second ingest batch")
-        try Ingest.ingestBatch(t, batch(190 until 390))
-        finally sc.clearJobGroup()
-      } finally {
+    val out =
+      try body
+      finally {
         GraftSqlBridge.drainListenerBus(spark)
         spark.listenerManager.unregister(qel)
       }
+    (out, queries.toArray(Array.empty[QueryExecution]).toSeq
+      .map(qe => PlanAudit.planNodes(qe.executedPlan)))
+  }
+
+  // Every scan of one cached frame shares that frame's cached plan.
+  private def cacheScans(ns: Seq[SparkPlan]): Seq[SparkPlan] = ns.collect {
+    case s: InMemoryTableScanExec => s.relation.cachedPlan
+  }
+
+  test("a steady-state batch runs at most 6 jobs off one classified cache") {
+    val t = TokenTable.create(spark, tmpDir("ingest-jobs"))
+    Ingest.ingestBatch(t, batch(0 until 200))
+
+    val sc = spark.sparkContext
+    val group = s"ingest-jobs-${java.util.UUID.randomUUID()}"
+    // Offsets 190..389: ten replayed messages, so the watermark join runs.
+    val (res, ran) = plansOf {
+      sc.setJobGroup(group, "second ingest batch")
+      try Ingest.ingestBatch(t, batch(190 until 390))
+      finally sc.clearJobGroup()
+    }
     // Offsets 222, 259, 296, 333 and 370 are malformed.
     assert((res.appended, res.deduped, res.deadLettered, res.replayFiltered) ==
       ((185L, 0L, 5L, 10L)))
     val jobs = sc.statusTracker.getJobIdsForGroup(group)
     assert(jobs.length <= 6, s"${jobs.length} jobs for one steady-state batch")
 
-    val ran = queries.toArray(Array.empty[QueryExecution]).toSeq
-      .map(qe => PlanAudit.planNodes(qe.executedPlan))
-    // Every scan of one cached frame shares that frame's cached plan.
-    def cacheScans(ns: Seq[SparkPlan]): Seq[SparkPlan] = ns.collect {
-      case s: InMemoryTableScanExec => s.relation.cachedPlan
-    }
     val aggregate = ran.filterNot(_.exists(_.isInstanceOf[DataWritingCommandExec]))
     val write = ran.filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
     assert(aggregate.size == 1 && write.size == 1,
@@ -74,5 +85,17 @@ class IngestJobsSpec extends SparkSpec {
     def parses(p: SparkPlan) = p.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))
     assert(PlanAudit.planNodes(cachedPlan).exists(parses), "the cache holds the parsed batch")
     assert(!ran.flatten.exists(parses), "no query may re-parse the batch outside the cache")
+  }
+
+  test("a table's first batch runs the replay join every later batch runs") {
+    val t = TokenTable.create(spark, tmpDir("ingest-first"))
+    val (res, ran) = plansOf(Ingest.ingestBatch(t, batch(0 until 50)))
+    assert(res.replayFiltered == 0L && res.appended == 48L)
+    val cached = ran.flatMap(cacheScans).distinct
+    assert(cached.size == 1, s"${cached.size} cached frames")
+    assert(PlanAudit.planNodes(cached.head).exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftOuter
+      case _ => false
+    }, "the first batch must flag replays through the broadcast join")
   }
 }

@@ -112,4 +112,29 @@ class ClusterByDocIdSpec extends SparkSpec {
     assert(res.untouchedFiles + res.touchedFiles == filesTotal)
     assert(t.scan().count() == 2400, "narrow merge must only update, not grow")
   }
+
+  test("a one-bucket recluster runs no sample or preimage-probe job") {
+    val t = TokenTable.create(spark, tmpDir("cbd_one"))
+    (0 until 2).foreach { i =>
+      t.append(TokenGen.asTokenRows(TokenGen.generate(
+        spark, 300, idOffset = i * 1000L, numPartitions = 2)))
+    }
+    t.append(TokenGen.asTokenRows(TokenGen.generate(
+      spark, 300, idOffset = 500, numPartitions = 2)))
+    val before = checksum(t.scan())
+    assert(Cluster.hashPreimages(spark, 1).toSeq == Seq(0L))
+
+    val sc = spark.sparkContext
+    val group = s"cbd-one-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "one-bucket recluster")
+    val res = try Cluster.runByDocId(t, "job-one", targetBytes = 64L * 1024 * 1024)
+      finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    assert(res.buckets == 1 && res.saltedBuckets == 0)
+    // The exchange's map stage and the write; no doc_id sample.
+    assert(jobs <= 2, s"$jobs Spark jobs for a one-bucket recluster")
+    assert(checksum(t.scan()) == before)
+    val files = t.filesLocal(t.current)
+    assert(files.size == 1 && files.head.rows == 900)
+  }
 }

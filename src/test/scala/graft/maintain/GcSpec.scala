@@ -5,9 +5,11 @@ import graft.ingest.TokenGen
 import graft.table.TokenTable
 import java.nio.file.{Files, Paths}
 
-/** Distributed orphan GC (M4): listing fans out per first-level dir and
-  * deletes run in mapPartitions — no driver-side per-file loop — so a
-  * 10^4-orphan sweep is a parallel job, with live data untouched.
+/** Orphan GC at 10^4 orphans (M4): the inventory is still below
+  * `ManifestDistributeThreshold`, so the sweep runs on Expire's driver
+  * branch (no Spark job; `ExpireSpec` pins that branch's equivalence
+  * with the distributed one) — with live data untouched and the grace
+  * window respected.
   */
 class GcSpec extends SparkSpec {
 
