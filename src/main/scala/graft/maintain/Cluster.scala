@@ -3,8 +3,11 @@ package graft.maintain
 import graft.functions.{CurveKeys, Search, SearchOps}
 import graft.lineage.Lineage
 import graft.table.{DataFile, Snapshot, TokenTable}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Z-order / Hilbert clustering (north-star M2).
   *
@@ -81,54 +84,39 @@ object Cluster {
     * included) a second time just to sketch a column we already
     * computed exactly. One table-sized pass saved per clustering run.
     *
-    * Found by evaluating Spark's own `pmod(hash(id), n)` over a small
-    * range (never a reimplementation of Murmur3, so it cannot drift
-    * from HashPartitioning's `Pmod(Murmur3Hash(exprs), n)`); coupon
-    * collector says 32n candidates cover all n residues with
-    * overwhelming probability, and the span quadruples until they do.
+    * Found on the driver, with no Spark job, by evaluating the
+    * exchange's own partition-id expression (`HashPartitioning`'s
+    * `Pmod(Murmur3Hash(key), n)` over one non-null long) on 0, 1, 2, …
+    * and keeping the least hit per residue. It is Spark's expression,
+    * not a reimplementation of Murmur3, so it cannot drift from the
+    * exchange. Coupon collector says ~n ln n candidates cover all n
+    * residues; the span stops at 2048n.
     */
-  /** Deterministic per n (pure function of Murmur3), so the per-session
-    * memo is safe: repeat exchanges at the same width (merge after
-    * cluster, iterative maintenance) skip the probe jobs entirely.
-    */
-  private val preimageMemo =
-    new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
-
-  def hashPreimages(spark: SparkSession, n: Int): Array[Long] = {
-    // One partition: every key lands in it, and 0 is the least
-    // candidate the probe would find. No job.
-    if (n == 1) return Array(0L)
-    val memo = preimageMemo.get(n)
-    if (memo != null) return memo
-    val computed = computePreimages(spark, n)
-    preimageMemo.putIfAbsent(n, computed)
-    computed
-  }
-
-  private def computePreimages(spark: SparkSession, n: Int): Array[Long] = {
-    import spark.implicits._
+  def hashPreimages(n: Int): Array[Long] = {
     require(n >= 1, s"need at least one partition, got $n")
-    var span = 32L * n
-    while (span <= 2048L * n) {
-      val found = spark.range(span)
-        .select(pmod(hash($"id"), lit(n)).cast("int").as("p"), $"id")
-        .groupBy($"p").agg(min($"id").as("x"))
-        .as[(Int, Long)].collect()
-      if (found.length == n) {
-        val arr = new Array[Long](n)
-        found.foreach { case (p, x) => arr(p) = x }
-        return arr
-      }
-      span *= 4
+    // One partition: every key lands in it.
+    if (n == 1) return Array(0L)
+    val pid = HashPartitioning(Seq(BoundReference(0, LongType, nullable = false)), n)
+      .partitionIdExpression
+    val found = Array.fill(n)(-1L)
+    val row = new GenericInternalRow(1)
+    var left = n
+    var x = 0L
+    while (left > 0 && x < 2048L * n) {
+      row.setLong(0, x)
+      val p = pid.eval(row).asInstanceOf[Int]
+      if (found(p) < 0) { found(p) = x; left -= 1 }
+      x += 1
     }
-    throw new IllegalStateException(
+    if (left > 0) throw new IllegalStateException(
       s"hashPreimages: ${2048L * n} candidates left a residue class mod $n empty")
+    found
   }
 
   /** Exchange rows to partition `pid` exactly (see [[hashPreimages]]);
     * `pidCol` must be an INT in [0, n). */
   def exchangeByPid(df: DataFrame, pidCol: Column, n: Int): DataFrame = {
-    val pre = hashPreimages(df.sparkSession, n)
+    val pre = hashPreimages(n)
     df.withColumn("__sk", element_at(lit(pre), pidCol + 1))
       .repartition(n, col("__sk"))
       .drop("__sk")

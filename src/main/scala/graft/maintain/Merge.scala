@@ -13,16 +13,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *     reference's D1 semantics (`/root/reference/src/pipeline/mod.rs:58-80`:
   *     first occurrence wins, duplicates silently dropped), expressed as
   *     `row_number() over (partition by doc_id order by precedence) = 1`.
-  *  2. File pruning: join source key bounds against manifest min/max —
-  *     only data files whose [minDocId, maxDocId] can contain a source
-  *     key are touched; everything else carries over untouched (no IO).
-  *     Inside touched files, row groups outside every source-key extent
-  *     carry over as bytewise copies.
+  *  2. Planning in one source pass ([[planPrune]]): one fold over the
+  *     cached source's doc_id column yields the row count and a key
+  *     sample that, up to [[KeySampleCap]] rows, is every key — then the
+  *     keys ARE the extents and no aggregation runs. Only data files whose
+  *     [minDocId, maxDocId] intersects a source-key extent are touched;
+  *     everything else carries over untouched (no IO). Inside touched
+  *     files, row groups outside every extent carry over as bytewise
+  *     copies.
   *  3. Rewrite: `touched LEFT ANTI JOIN source keys ON doc_id` ∪ `source`
   *     (upsert = matched rows replaced, unmatched inserted), range-placed
-  *     by one exchange on doc_id so every output file keeps tight stats.
+  *     by one exchange on doc_id sized by the data: range bounds from a
+  *     target sample plus one output range per hot run
+  *     ([[extentClusterBounds]]), so every output file keeps tight stats.
   *  4. One atomic snapshot through [[Rewrite.commit]]: new files +
-  *     untouched survivors.
+  *     untouched survivors. The source cache is released on every
+  *     exit.
   */
 object Merge {
 
@@ -85,11 +91,12 @@ object Merge {
     *     file segments at actual key positions — endpoints alone fuse
     *     disjoint key clusters inside one segment into an extent
     *     spanning the dead gap between them.
-    *  2. One bounded aggregation collects, per segment, the actual
-    *     source-key EXTENT [min key, max key] — output rows bounded by
-    *     the segment count regardless of source size (map-side partial
-    *     agg). The extents are disjoint, sorted, and together cover
-    *     every source key.
+    *  2. Per segment, the actual source-key EXTENT [min key, max key]:
+    *     when the sample holds every key, each key is its own extent;
+    *     otherwise one bounded aggregation collects them — output rows
+    *     bounded by the segment count regardless of source size
+    *     (map-side partial agg). The extents are disjoint, sorted, and
+    *     together cover every source key.
     *  3. A file is touched iff its [min,max] INTERSECTS some extent
     *     ([[intersectsExtents]]: one binary search + one compare per
     *     file, on the driver, which streams the file list for
@@ -109,9 +116,10 @@ object Merge {
 
   /** Pruning output plus what [[mergeInto]] plans with: the touched
     * DataFiles (driver memory tracks the TOUCHED count, not the file
-    * count) and the total inventory size.
+    * count), the total inventory size and the source's row count.
     */
-  case class PrunePlan(prune: Prune, touched: Seq[DataFile], totalFiles: Long)
+  case class PrunePlan(prune: Prune, touched: Seq[DataFile], totalFiles: Long,
+      srcRows: Long)
 
   /** Endpoint-array cap: above this many distinct file endpoints the
     * exact driver-side endpoint collection switches to a distributed
@@ -131,25 +139,81 @@ object Merge {
     */
   val DefaultBroadcastKeyRows: Long = 2000000L
 
-  /** Cap on the source-key sample mixed into the extent segmentation
+  /** Size of the source-key sample the planning fold collects, and the
+    * source-row count up to which that sample is the whole key set
     * (bounds the extent arrays the classifiers broadcast and binary-
     * search; 4k splits resolve any realistic cluster structure while
     * keeping the per-task array payload ~100KB).
     */
   val KeySampleCap: Int = 1 << 12
 
+  /** At most this many hot runs get their own output range in the
+    * rewrite exchange ([[extentClusterBounds]]).
+    */
+  val MaxHotRuns: Int = 32
+
+  /** The [[KeySampleCap]] distinct keys of least (hash, key), folded one
+    * key at a time. The least-hash keys are a uniform, deterministic
+    * sample of the distinct keys, and the least-hash set of a union is
+    * the least-hash set of its parts' least-hash sets, so per-task folds
+    * merge on the driver; with at most [[KeySampleCap]] distinct keys the
+    * sample IS the key set. Nulls match no key and are skipped.
+    */
+  private final class LeastHashKeys {
+    private val set = scala.collection.mutable.TreeSet.empty[(Int, String)]
+    def +=(k: String): Unit = if (k != null) {
+      val e = (scala.util.hashing.MurmurHash3.stringHash(k), k)
+      if (set.size < KeySampleCap) set += e
+      else if (Ordering[(Int, String)].lt(e, set.last)) {
+        set += e; set -= set.last
+      }
+    }
+    def keys: Array[String] = set.iterator.map(_._2).toArray
+  }
+
+  /** The one source-side planning pass: a per-task fold over the key
+    * projection, merged on the driver (as `Ingest`'s tally — a grouped
+    * aggregate would plan an exchange and one more job per pass).
+    * Returns the row count and the [[KeySampleCap]] least-hash distinct
+    * keys, sorted.
+    */
+  private def tallyKeys(srcKeys: DataFrame): (Long, Array[String]) = {
+    val spark = srcKeys.sparkSession
+    import spark.implicits._
+    val parts = srcKeys.select(col("doc_id")).as[String].mapPartitions { it =>
+      var rows = 0L
+      val least = new LeastHashKeys
+      it.foreach { k => rows += 1; least += k }
+      Iterator((rows, least.keys))
+    }.collect()
+    val least = new LeastHashKeys
+    parts.foreach(_._2.foreach(least += _))
+    (parts.map(_._1).sum, least.keys.sorted(Search.utf8Ordering))
+  }
+
   /** Streaming, bounded-memory segment-index construction (VERDICT r3
-    * task 4): two driver passes over the manifest-row ITERATOR (never a
+    * task 4): ONE Spark pass over the source keys ([[tallyKeys]]) and
+    * two driver passes over the manifest-row ITERATOR (never a
     * materialized Seq), holding at most `boundsCap` endpoints plus the
     * touched files. `filesDS` is consulted only on endpoint overflow,
     * where coarsening runs as Spark jobs.
+    *
+    * Up to `keyCap` source rows the fold has collected every key. Each
+    * key is then a segmentation bound, so each segment holds exactly one
+    * key and the extents are the sorted distinct keys themselves: the
+    * per-segment extent aggregation is provably redundant and does not
+    * run. Above `keyCap` the fold's key sample joins the file endpoints
+    * in the segmentation and the aggregation runs after the fold.
+    * `keyCap` is a test seam that forces the aggregation path; it may
+    * not exceed [[KeySampleCap]], the sample the fold keeps.
     */
-  def planPrune(filesIt: () => Iterator[DataFile], srcKeys: DataFrame,
-      filesDS: () => org.apache.spark.sql.Dataset[DataFile],
-      boundsCap: Int = DefaultBoundsCap,
-      knownSrcCount: Long = -1L): PrunePlan = {
+  private[maintain] def planPrune(filesIt: () => Iterator[DataFile],
+      srcKeys: DataFrame, filesDS: () => org.apache.spark.sql.Dataset[DataFile],
+      boundsCap: Int = DefaultBoundsCap, keyCap: Int = KeySampleCap): PrunePlan = {
+    require(keyCap <= KeySampleCap, s"keyCap $keyCap exceeds the fold's sample")
     val spark = srcKeys.sparkSession
     import spark.implicits._
+    val (srcRows, keySample) = tallyKeys(srcKeys)
     // Pass 1: endpoints (bounded) + inventory count.
     val epb = scala.collection.mutable.ArrayBuffer.empty[String]
     var overflow = false
@@ -167,51 +231,43 @@ object Merge {
       }
     }
     if (total == 0L)
-      return PrunePlan(Prune(Set.empty, Array.empty), Nil, 0L)
+      return PrunePlan(Prune(Set.empty, Array.empty), Nil, 0L, srcRows)
     if (!anyStatted) {
       // No stats anywhere: every file is touched (never prunable).
       val all = filesIt().toSeq
       return PrunePlan(Prune(all.map(_.path).toSet, Array.empty),
-        all, total)
+        all, total, srcRows)
     }
     val fileBounds: Array[String] =
       if (!overflow) epb.distinct.sorted(Search.utf8Ordering).toArray
       else coarseEndpoints(filesDS(), boundsCap)
-    // Segmentation for the EXTENT aggregation: file endpoints PLUS a
-    // capped deterministic sample of the source keys themselves. File
-    // endpoints alone make one extent per file segment, which fuses
-    // disjoint key clusters inside a wide segment into one range
-    // spanning the dead gap between them (a 2-cluster update inside one
-    // file classified ~everything between the clusters hot). Sampled
-    // keys split such segments at actual key positions, so empty slices
-    // between clusters produce NO extent. String keyspaces have no
-    // numeric gap metric — key-anchored splitting is the scale-safe way
-    // to discover cluster structure.
-    val srcCount = if (knownSrcCount >= 0) knownSrcCount else srcKeys.count()
-    val keySample: Array[String] =
-      if (srcCount == 0) Array.empty
-      else if (srcCount <= KeySampleCap)
-        srcKeys.distinct().as[String].collect()
-      else srcKeys
-        .sample(withReplacement = false,
-          math.min(1.0, KeySampleCap.toDouble * 1.2 / srcCount), seed = 42L)
-        .distinct().as[String].collect()
-    val extBounds: Array[String] =
-      (fileBounds ++ keySample).distinct.sorted(Search.utf8Ordering).toArray
-    // Per-segment source-key extents: ONE aggregation, output bounded by
-    // the segment count.
-    val segExtents: Array[(Int, String, String)] = srcKeys
-      .select(SearchOps.bucketOfStr(col("doc_id"), extBounds).as("seg"),
-        col("doc_id"))
-      .groupBy($"seg")
-      .agg(min($"doc_id").as("lo"), max($"doc_id").as("hi"))
-      .as[(Int, String, String)].collect()
-    // Source-key extents sorted by lo (disjoint — per-segment min/max
-    // of disjoint segments): the TIGHT file/row-group hot test.
-    val extSorted = segExtents.map(r => (r._2, r._3))
-      .sortBy(_._1)(Search.utf8Ordering)
-    val extLo = extSorted.map(_._1)
-    val extHi = extSorted.map(_._2)
+    // Source-key extents, sorted by lo and disjoint. Above the cap the
+    // segmentation is the file endpoints PLUS the key sample: endpoints
+    // alone make one extent per file segment, which fuses disjoint key
+    // clusters inside a wide segment into one range spanning the dead
+    // gap between them (a 2-cluster update inside one file classified
+    // ~everything between the clusters hot). Sampled keys split such
+    // segments at actual key positions, so empty slices between
+    // clusters produce NO extent. String keyspaces have no numeric gap
+    // metric — key-anchored splitting is the scale-safe way to discover
+    // cluster structure.
+    val (extLo, extHi) =
+      if (srcRows <= keyCap) (keySample, keySample)
+      else {
+        val extBounds: Array[String] =
+          (fileBounds ++ keySample).distinct.sorted(Search.utf8Ordering).toArray
+        // Per-segment extents: ONE aggregation, output bounded by the
+        // segment count.
+        val extSorted = srcKeys
+          .select(SearchOps.bucketOfStr(col("doc_id"), extBounds).as("seg"),
+            col("doc_id"))
+          .groupBy($"seg")
+          .agg(min($"doc_id").as("lo"), max($"doc_id").as("hi"))
+          .as[(Int, String, String)].collect()
+          .map(r => (r._2, r._3))
+          .sortBy(_._1)(Search.utf8Ordering)
+        (extSorted.map(_._1), extSorted.map(_._2))
+      }
     val extLoU8 = extLo.map(UTF8String.fromString)
     val extHiU8 = extHi.map(UTF8String.fromString)
     // Pass 2: touched selection — files without stats can never be
@@ -223,7 +279,7 @@ object Merge {
         touched += f
     }
     PrunePlan(Prune(touched.map(_.path).toSet, fileBounds, extLo, extHi),
-      touched.toSeq, total)
+      touched.toSeq, total, srcRows)
   }
 
   /** Distributed endpoint coarsening: every k-th of the distinct sorted
@@ -245,28 +301,51 @@ object Merge {
       .sorted(Search.utf8Ordering)
   }
 
-  /** Extent-aligned split points: the source-key extents, coarsened to
-    * at most `cap` clusters, each contributing [lo, succ(hi)) bounds —
-    * so HOT key ranges land in their own output files and every cold
-    * output's [min,max] provably excludes them. Without these, a small
-    * rewrite (one quantile range) emits one file spanning hot and cold
-    * rows alike, and the NEXT merge/delete over the same keys re-grazes
-    * all of it (PruningSpec pins this). succ(hi) = hi + '\u0000', the
-    * least string above hi in binary order, so every key past the
-    * extent's last one falls outside the hot range.
+  /** Extent-aligned split points: the source-key extents fused into hot
+    * RUNS, each contributing [lo, succ(hi)) bounds — so hot key ranges
+    * land in their own output files and every cold output's [min,max]
+    * provably excludes them. Without these, a small rewrite (one
+    * quantile range) emits one file spanning hot and cold rows alike,
+    * and the NEXT merge/delete over the same keys re-grazes all of it
+    * (PruningSpec pins this). succ(hi) = hi + '\u0000', the least string
+    * above hi in binary order, so every key past a run's last one falls
+    * outside the hot range.
+    *
+    * The coarsening rule: consecutive extents with no `targetKeys`
+    * member (sorted, UTF-8 order) strictly between them fuse into one
+    * run, since no target row can sit between them. Where more than
+    * [[MaxHotRuns]] runs remain, runs split only at the widest gaps,
+    * counted in target keys. A batch of contiguous key runs (an update
+    * range, an insert range past the table's end) thus gets one output
+    * range per run, whatever its key count, and no run spans a gap full
+    * of cold rows that the next DELETE would have to decode.
     */
   private[maintain] def extentClusterBounds(extLo: Array[String],
-      extHi: Array[String], cap: Int): Array[String] = {
+      extHi: Array[String], targetKeys: Array[String]): Array[String] = {
     val n = extLo.length
-    val step = math.max(1, (n + cap - 1) / cap)
-    (0 until n by step).flatMap(i =>
-      Seq(extLo(i), extHi(math.min(n - 1, i + step - 1)) + "\u0000")).toArray
+    if (n == 0) return Array.empty
+    val keys = targetKeys.map(UTF8String.fromString)
+    // #(targetKeys < k)
+    def below(k: String): Int = {
+      val u = UTF8String.fromString(k)
+      var a = 0; var b = keys.length
+      while (a < b) {
+        val m = (a + b) >>> 1
+        if (keys(m).compareTo(u) < 0) a = m + 1 else b = m
+      }
+      a
+    }
+    val gaps = (0 until n - 1).map(i => below(extLo(i + 1)) - below(extHi(i) + "\u0000"))
+    val cuts = gaps.indices.filter(gaps(_) > 0)
+      .sortBy(i => (-gaps(i), i)).take(MaxHotRuns - 1).sorted
+    val starts = 0 +: cuts.map(_ + 1)
+    val ends = cuts :+ (n - 1)
+    starts.zip(ends).flatMap { case (i, j) =>
+      Seq(extLo(i), extHi(j) + "\u0000") }.toArray
   }
 
   def mergeInto(table: TokenTable, source: DataFrame,
       precedenceCol: String, jobId: String): Result = {
-    val spark = table.spark
-    import spark.implicits._
     val parent = table.current
 
     // Align the source to the table's PHYSICAL schema first (sources
@@ -284,13 +363,25 @@ object Merge {
         precedenceCol)
       .select(physFields.map(col): _*)
       .cache()
-    val srcRows = src.count()
-    // Keys-only projection cached separately: planning (key sample,
-    // per-segment extents) and the broadcast build consume ONLY doc_id,
-    // but reading it through the full-row cache decompresses the token
-    // payload every pass (~1.5s per planning job at bench scale vs
-    // ~0.1s off a ~15MB key cache).
-    val srcKeys = src.select($"doc_id").cache()
+    // The cache is released on EVERY exit: a lost commit CAS, a failed
+    // write or a source that throws while the cache builds must not
+    // leave it registered in the session's cache manager.
+    try mergeCached(table, parent, src, physSchema, jobId)
+    finally src.unpersist()
+  }
+
+  /** The cached-source pipeline: plan, classify, rewrite, commit.
+    * Planning and the anti join's build side read only the doc_id column
+    * of the source cache. A separate keys-only cache would cost one more
+    * job to build under adaptive execution, which materializes every
+    * cached relation as its own query stage.
+    */
+  private def mergeCached(table: TokenTable, parent: Snapshot, src: DataFrame,
+      physSchema: org.apache.spark.sql.types.StructType, jobId: String): Result = {
+    val spark = table.spark
+    import spark.implicits._
+    val physFields = physSchema.fieldNames.toIndexedSeq
+    val srcKeys = src.select($"doc_id")
 
     // Streamed planning: the driver holds the endpoint array (capped)
     // and the TOUCHED files — never the full inventory. The cap is
@@ -300,8 +391,8 @@ object Merge {
     val boundsCap = spark.conf.getOption("graft.merge.boundsCap")
       .map(_.toInt).getOrElse(DefaultBoundsCap)
     val pruned = planPrune(() => table.filesStream(parent),
-      srcKeys, () => table.files(parent), boundsCap,
-      knownSrcCount = srcRows)
+      srcKeys, () => table.files(parent), boundsCap)
+    val srcRows = pruned.srcRows
     val prune = pruned.prune
     val touched = pruned.touched
     val untouchedCount = pruned.totalFiles - touched.size
@@ -343,29 +434,36 @@ object Merge {
     // Placement: a map-only rewrite emits one file per scan task, each
     // spanning the full keyspace after curve clustering, so every later
     // doc_id-keyed op grazes every output. One range exchange on sampled
-    // doc_id bounds ∪ source-extent bounds (exact hash-preimage
-    // placement, as runByDocId) moves only the DECODED bytes and keeps
-    // per-file [min,max] tight. Round-6 A/B at bench scale: merge
-    // 12.3-12.8s / next-delete 1.3s, vs map-only range-partitioned files
+    // doc_id bounds ∪ hot-run bounds (exact hash-preimage placement, as
+    // runByDocId) moves only the DECODED bytes and keeps per-file
+    // [min,max] tight. Round-6 A/B at bench scale: merge 12.3-12.8s /
+    // next-delete 1.3s, vs map-only range-partitioned files
     // 11.8-17.0s / 1.6-2.4s (568 files) and no placement 8.4s / 5.3-7.8s.
     val maxPart = spark.sessionState.conf.filesMaxPartitionBytes
     val nOut = math.max(1L, math.min(
       (plan.decodedBytes + maxPart - 1) / math.max(1L, maxPart),
       4L * spark.sessionState.conf.numShufflePartitions)).toInt
-    val rangeBounds: Array[String] = {
-      val fraction = math.min(1.0, 200000.0 / math.max(1L, touchedRows))
-      val sampleKeys =
-        if (nOut <= 1 || plan.decodeRels.isEmpty) Array.empty[String]
-        else target.select($"doc_id")
-          .sample(withReplacement = false, fraction, seed = 42L)
-          .as[String].collect().sorted(Search.utf8Ordering)
+    // One target doc_id sample serves both the range bounds and the
+    // hot-run coarsening, which needs it only between two extents.
+    val sampleKeys: Array[String] =
+      if (plan.decodeRels.isEmpty || (nOut <= 1 && prune.extLo.length <= 1))
+        Array.empty
+      else target.select($"doc_id")
+        .sample(withReplacement = false,
+          math.min(1.0, 200000.0 / math.max(1L, touchedRows)), seed = 42L)
+        .as[String].collect().sorted(Search.utf8Ordering)
+    val rangeBounds: Array[String] =
       if (sampleKeys.isEmpty) Array.empty
       else (1 until nOut)
         .map(i => sampleKeys(
           (i.toLong * sampleKeys.length / nOut).toInt.min(sampleKeys.length - 1)))
         .distinct.toArray
-    }
-    val bounds = (rangeBounds ++ extentClusterBounds(prune.extLo, prune.extHi, 32))
+    // Target keys the gap rule counts: the decoded sample, plus the file
+    // endpoints and the cold copies' endpoints — real keys the sample
+    // cannot see (untouched, fully cold and row-group-copied rows).
+    val coldEnds = plan.coldFiles.flatMap(f => Seq(f.minDocId, f.maxDocId)).filter(_ != null)
+    val targetKeys = (sampleKeys ++ prune.bounds ++ coldEnds).sorted(Search.utf8Ordering)
+    val bounds = (rangeBounds ++ extentClusterBounds(prune.extLo, prune.extHi, targetKeys))
       .distinct.sorted(Search.utf8Ordering)
     val rewriteDF =
       if (bounds.isEmpty) merged
@@ -380,8 +478,6 @@ object Merge {
         "touched-bytes" -> touched.map(_.bytes).sum.toString,
         "fully-cold-files" -> plan.fullyCold.size.toString)
     }
-    src.unpersist()
-    srcKeys.unpersist()
     Result(snap, touched.size, untouchedCount.toInt, srcRows,
       touchedBytes = touched.map(_.bytes).sum,
       decodedBytes = plan.decodedBytes,

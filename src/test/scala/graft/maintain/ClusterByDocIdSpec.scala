@@ -122,7 +122,7 @@ class ClusterByDocIdSpec extends SparkSpec {
     t.append(TokenGen.asTokenRows(TokenGen.generate(
       spark, 300, idOffset = 500, numPartitions = 2)))
     val before = checksum(t.scan())
-    assert(Cluster.hashPreimages(spark, 1).toSeq == Seq(0L))
+    assert(Cluster.hashPreimages(1).toSeq == Seq(0L))
 
     val sc = spark.sparkContext
     val group = s"cbd-one-${java.util.UUID.randomUUID()}"

@@ -179,6 +179,25 @@ class MaintainSpec extends SparkSpec {
     assert(p.contains("hashpartitioning") && !p.contains("rangepartitioning"), p)
   }
 
+  test("hash preimages come from the driver: no job, and Spark's hash agrees") {
+    import spark.implicits._
+    val widths = Seq(2, 3, 67, 200, 977)
+    val sc = spark.sparkContext
+    val group = s"preimages-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "hash preimages")
+    val pre = try widths.map(n => n -> Cluster.hashPreimages(n)).toMap
+      finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "preimages must be found without a Spark job")
+    for (n <- Seq(2, 3, 67, 200)) {
+      val x = pre(n)
+      assert(x.length == n)
+      val wrong = x.toSeq.zipWithIndex.toDF("x", "p")
+        .filter(pmod(hash($"x"), lit(n)) =!= $"p").count()
+      assert(wrong == 0, s"n=$n: $wrong preimages hash to another partition")
+    }
+  }
+
   test("hilbert clustering preserves state") {
     val t = smallFileTable(commits = 6)
     val before = checksum(t.scan())
