@@ -160,24 +160,28 @@ object Cluster {
     */
   val SampleFileCap: Int = 64
 
+  /** The session's sample-file cap (`graft.cluster.sampleFiles`). */
+  private def sampleFileCap(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.conf.getOption("graft.cluster.sampleFiles").map(_.toInt).getOrElse(SampleFileCap)
+
   /** One streamed pass picking every k-th file so at most `cap` survive,
     * spread across the manifest order (commits interleave the keyspace,
     * so order-spread approximates range-spread). Returns the picked
-    * table-relative paths and their total row count (for the sample
-    * fraction). O(cap) memory.
+    * files and their total row count (for the sample fraction). O(cap)
+    * memory.
     */
   def pickSampleFiles(it: Iterator[DataFile], total: Long, cap: Int)
-      : (Seq[String], Long) = {
+      : (Seq[DataFile], Long) = {
     if (total <= 0) return (Nil, 0L)
     val k = math.max(1L, (total + cap - 1) / cap)
     var i = 0L
-    val paths = Seq.newBuilder[String]
+    val picked = Seq.newBuilder[DataFile]
     var rows = 0L
     it.foreach { f =>
-      if (i % k == 0) { paths += f.path; rows += f.rows }
+      if (i % k == 0) { picked += f; rows += f.rows }
       i += 1
     }
-    (paths.result(), rows)
+    (picked.result(), rows)
   }
 
   /** Everything clustering PLANNING needs from the inventory, folded in
@@ -330,16 +334,10 @@ object Cluster {
     val sampleKeys: Array[String] =
       if (buckets == 1) Array.empty
       else {
-        val sampleCap = spark.conf.getOption("graft.cluster.sampleFiles")
-          .map(_.toInt).getOrElse(SampleFileCap)
-        val (samplePaths, sampleRows) = {
-          val it = table.filesStream(parent).filterNot(f => carriedPaths.contains(f.path))
-          pickSampleFiles(it, nRewrite, sampleCap)
-        }
-        val sampleScan =
-          if (samplePaths.isEmpty) input
-          else spark.read.schema(graft.table.Format.schemaOf(parent))
-            .parquet(samplePaths.map(p => s"${table.location}/$p"): _*)
+        val (sampleFiles, sampleRows) = pickSampleFiles(
+          table.filesStream(parent).filterNot(f => carriedPaths.contains(f.path)),
+          nRewrite, sampleFileCap(spark))
+        val sampleScan = table.read(parent, sampleFiles)
         val fraction = math.min(1.0, 200000.0 / math.max(1L, sampleRows))
         sampleScan.select($"doc_id")
           .sample(withReplacement = false, fraction, seed = 42L)
@@ -437,14 +435,9 @@ object Cluster {
     // SampleFileCap files — picked spread across the manifest stream —
     // instead of scheduling every row group of the table. At bench
     // scale every file is picked and the plan is unchanged.
-    val sampleCap = spark.conf.getOption("graft.cluster.sampleFiles")
-      .map(_.toInt).getOrElse(SampleFileCap)
-    val (samplePaths, sampleRows) =
-      pickSampleFiles(table.filesStream(parent), inv.files, sampleCap)
-    val sampleScan =
-      if (samplePaths.isEmpty) table.scan(parent)
-      else spark.read.schema(graft.table.Format.schemaOf(parent))
-        .parquet(samplePaths.map(p => s"${table.location}/$p"): _*)
+    val (sampleFiles, sampleRows) =
+      pickSampleFiles(table.filesStream(parent), inv.files, sampleFileCap(spark))
+    val sampleScan = table.read(parent, sampleFiles)
     val fraction = math.min(1.0, 200000.0 / math.max(1L, sampleRows))
     // The sample's SOURCE values complete the dictionary; only distinct
     // values leave the executors (an aggregate of a ~5-value column —

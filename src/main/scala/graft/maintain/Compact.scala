@@ -211,7 +211,15 @@ object Compact {
       planned.zipWithIndex.map { case (b, i) => i.toString -> b.map(_.path) }.toMap))
     // Resume against the *persisted* plan (stable task identity); the
     // deterministic stream re-yields the same candidates at a version.
-    val byPath = planned.flatten.map(f => f.path -> f).toMap
+    // A plan persisted under another target size names parent files
+    // outside this pass's candidates: their rows come from the parent.
+    val planPaths = plan.tasks.values.flatten.toSet
+    val byPath = {
+      val candidates = planned.flatten.map(f => f.path -> f).toMap
+      if (planPaths.subsetOf(candidates.keySet)) candidates
+      else table.filesStream(parent).filter(f => planPaths.contains(f.path))
+        .map(f => f.path -> f).toMap
+    }
     val tasks = plan.tasks.toSeq.sortBy(_._1.toInt)
 
     if (tasks.isEmpty)
@@ -250,16 +258,14 @@ object Compact {
             done.outputFiles
           case None =>
             val t0 = System.nanoTime()
-            val binFiles = inputPaths.flatMap(byPath.get)
+            val binFiles = inputPaths.map(byPath)
             // Decode → single-file re-encode: the fallback. Keeps rows
             // clustered by doc_id within the file so min/max doc_id
             // stats stay selective after consolidation.
             def reencode(): Seq[DataFile] = {
-              val in = inputPaths.map(p => s"${table.location}/$p")
               // Parent-pinned schema: a mid-job ALTER never changes what
               // this bin re-encodes (the commit CAS aborts it anyway).
-              val df = spark.read.schema(graft.table.Format.schemaOf(parent))
-                .parquet(in: _*)
+              val df = table.read(parent, binFiles)
               // A bin fits targetBytes by construction: single output
               // file, zero shuffle.
               table.writeDataFilesTo(
@@ -274,11 +280,8 @@ object Compact {
             // group counts (pre-field manifests) assume one group per
             // file, which reduces to the old file-size heuristic.
             // Rechunk mode re-encodes unconditionally.
-            val avgGroupBytes =
-              if (binFiles.size == inputPaths.size && binFiles.nonEmpty)
-                binFiles.map(_.bytes).sum /
-                  binFiles.map(f => math.max(1, f.groups).toLong).sum
-              else 0L // resumed plan missing manifest rows: re-encode
+            val avgGroupBytes = binFiles.map(_.bytes).sum /
+              math.max(1L, binFiles.map(f => math.max(1, f.groups).toLong).sum)
             val out: Seq[DataFile] =
               if (!rechunk && avgGroupBytes >= reencodeBelow) {
                 // Clear any partial decode output from a crashed attempt
@@ -322,10 +325,10 @@ object Compact {
         "files-in" -> rewrittenPaths.size.toString,
         "files-out" -> newFiles.size.toString,
         "resumed-tasks" -> resumed.toString,
-        "bytes-in" -> rewrittenPaths.iterator.map(p => byPath.get(p).map(_.bytes).getOrElse(0L)).sum.toString))
+        "bytes-in" -> rewrittenPaths.iterator.map(byPath(_).bytes).sum.toString))
     Result(snap, tasks.size, totalFiles.toInt,
       (totalFiles - rewrittenPaths.size + newFiles.size).toInt,
-      rewrittenPaths.iterator.map(p => byPath.get(p).map(_.bytes).getOrElse(0L)).sum,
+      rewrittenPaths.iterator.map(byPath(_).bytes).sum,
       resumed, execId)
   }
 }

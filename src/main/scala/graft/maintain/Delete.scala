@@ -77,7 +77,6 @@ object Delete {
     * them, ADVICE r4).
     */
   def deleteWhere(table: TokenTable, predicate: Column, jobId: String): Result = {
-    val spark = table.spark
     val parent = table.current
     val cond: Expression = resolveCondition(table, parent, predicate)
 
@@ -103,18 +102,16 @@ object Delete {
 
     // Every grazed file fully cold and nothing drops: provably nothing
     // to delete — commit nothing (same contract as the no-op predicate).
-    if (drop.isEmpty && plan.decodeRels.isEmpty)
+    if (drop.isEmpty && plan.decode.isEmpty)
       return Result(parent, 0, 0, untouched + rw.size, 0L, 0L)
 
     // Copy-on-write rewrite of the decode set only: keep survivors,
     // preserve doc_id order within files.
     val survivors =
-      if (plan.decodeRels.isEmpty) None
+      if (plan.decode.isEmpty) None
       else {
-        val paths = plan.decodeRels.map(p => s"${table.location}/$p")
         import org.apache.spark.sql.functions.{coalesce, lit}
-        Some(spark.read.schema(graft.table.Format.schemaOf(parent))
-          .parquet(paths: _*)
+        Some(table.read(parent, plan.decode)
           .filter(!coalesce(predicate, lit(false))))
       }
     commitDelete(table, parent, jobId, drop, rw, untouched, plan, survivors)
@@ -154,7 +151,6 @@ object Delete {
   def deleteByDocIds(table: TokenTable, docIds: DataFrame, jobId: String,
       inlineLimit: Int = 10000): Result = {
     import org.apache.spark.sql.functions._
-    val spark = table.spark
     val distinctIds = docIds.select(col("doc_id")).distinct()
     // limit+1 caps the driver materialization at the inline threshold.
     val sample = distinctIds.limit(inlineLimit + 1).collect().map(_.getString(0))
@@ -180,14 +176,12 @@ object Delete {
       if (rw.isEmpty) return Result(parent, 0, 0, untouched, 0L, 0L)
       val plan = Rewrite.byExtents(table, jobId, parent,
         prunePlan.prune.extLo, prunePlan.prune.extHi, rw)
-      if (plan.decodeRels.isEmpty)
+      if (plan.decode.isEmpty)
         return Result(parent, 0, 0, untouched + rw.size, 0L, 0L)
-      val paths = plan.decodeRels.map(p => s"${table.location}/$p")
       // No broadcast hint: beyond the inline threshold the list's size
       // is unbounded, so AQE picks broadcast vs shuffled anti join from
       // the measured build side.
-      val survivors = spark.read.schema(graft.table.Format.schemaOf(parent))
-          .parquet(paths: _*)
+      val survivors = table.read(parent, plan.decode)
         .join(distinctIds, Seq("doc_id"), "left_anti")
       commitDelete(table, parent, jobId, Nil, rw, untouched, plan, Some(survivors))
     }

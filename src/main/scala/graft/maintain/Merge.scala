@@ -410,11 +410,7 @@ object Merge {
       if (split) Rewrite.byExtents(table, jobId, parent, prune.extLo, prune.extHi, touched)
       else Rewrite.decodeAll(touched)
 
-    val target =
-      if (plan.decodeRels.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physSchema)
-      else spark.read.schema(physSchema)
-        .parquet(plan.decodeRels.map(p => s"${table.location}/$p"): _*)
+    val target = table.read(parent, plan.decode)
 
     // The upsert. The anti join needs only the source's doc_id KEYS on
     // its build side. A bounded batch (srcRows <= broadcastKeyRows)
@@ -446,7 +442,7 @@ object Merge {
     // One target doc_id sample serves both the range bounds and the
     // hot-run coarsening, which needs it only between two extents.
     val sampleKeys: Array[String] =
-      if (plan.decodeRels.isEmpty || (nOut <= 1 && prune.extLo.length <= 1))
+      if (plan.decode.isEmpty || (nOut <= 1 && prune.extLo.length <= 1))
         Array.empty
       else target.select($"doc_id")
         .sample(withReplacement = false,

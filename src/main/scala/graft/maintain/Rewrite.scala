@@ -18,14 +18,15 @@ object Rewrite {
     * hold a hit despite the file-level stats saying "maybe" — possible
     * when the file's [min,max] spans a gap between row groups);
     * `coldFiles` are the bytewise column-chunk copies of cold runs inside
-    * mixed files; `decodeRels` is what the rewrite must actually decode.
+    * mixed files; `decode` is what the rewrite must actually decode, read
+    * through [[TokenTable.read]].
     */
   private[maintain] case class ColdPlan(
       splits: Seq[graft.table.RowGroupCopy.Split],
       fullyCold: Seq[DataFile],
       coldFiles: Seq[DataFile],
-      decodeRels: Seq[String],
-      decodedBytes: Long) {
+      decode: Seq[DataFile]) {
+    def decodedBytes: Long = decode.map(_.bytes).sum
     def coldCopiedBytes: Long = coldFiles.map(_.bytes).sum
   }
 
@@ -70,7 +71,11 @@ object Rewrite {
     fromSplits(Nil, touched)
 
   /** Assemble a [[ColdPlan]] from per-file splits; empty splits = decode
-    * every touched file.
+    * every touched file. A hot extract's decode row is its origin's row
+    * with `path` and `bytes` (the extract's exact length) replaced: the
+    * origin's [min,max] bounds are a superset of the extract's rows, so
+    * the index's pruning stays sound, while `rows` and `groups` describe
+    * the origin — only the index reads these rows, never a manifest.
     */
   private def fromSplits(splits: Seq[graft.table.RowGroupCopy.Split],
       touched: Seq[DataFile]): ColdPlan = {
@@ -79,10 +84,9 @@ object Rewrite {
       ColdPlan(splits,
         fullyCold = splits.filter(_.allCold).map(s => byPath(s.origPath)),
         coldFiles = splits.flatMap(_.coldFiles),
-        decodeRels = splits.flatMap(_.decodeRel),
-        decodedBytes = splits.map(_.decodeBytes).sum)
-    else
-      ColdPlan(Nil, Nil, Nil, touched.map(_.path), touched.map(_.bytes).sum)
+        decode = splits.flatMap(s => s.decodeRel.map(rel =>
+          byPath(s.origPath).copy(path = rel, bytes = s.decodeBytes))))
+    else ColdPlan(Nil, Nil, Nil, touched)
   }
 
   /** Table-relative dirs for one job's bytewise cold copies and hot

@@ -52,7 +52,6 @@ object Update {
     */
   def updateWhere(table: TokenTable, assignments: Seq[(String, Column)],
       predicate: Column, jobId: String): Result = {
-    val spark = table.spark
     val parent = table.current
     // Schema pinned to the parent snapshot — one read; a concurrent
     // ALTER mid-job can never make planning, the rewrite projection and
@@ -120,11 +119,10 @@ object Update {
     // not grazed files.
     val plan = Rewrite.byPredicate(table, jobId, parent, cond, rw)
     // Every grazed file fully cold: nothing can match — commit nothing.
-    if (plan.decodeRels.isEmpty)
+    if (plan.decode.isEmpty)
       return Result(parent, 0, untouched + rw.size, 0L, 0L)
 
-    val paths = plan.decodeRels.map(p => s"${table.location}/$p")
-    val touched = spark.read.schema(physSchema).parquet(paths: _*)
+    val touched = table.read(parent, plan.decode)
     // Matched-row count over the touched files only (they are about to
     // be re-read for the rewrite; at most the touch set is scanned
     // twice, never the table).

@@ -8,20 +8,21 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMeta
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst [[FileIndex]] backed by the snapshot's MANIFESTS — the
-  * missing piece that makes the table format first-class inside Spark's
-  * planner, replacing `spark.read.parquet(path1..pathN)` scans:
+/** Catalyst [[FileIndex]] over manifest rows — the ONE way the engine
+  * opens table data files (no path-list parquet reads). The rows come
+  * from a snapshot's manifests (`files` = None: every scan and time
+  * travel, optionally minus `excludePaths`), or from a fixed list
+  * (`files` = Some: a maintenance op's decode set, sample or bin, which
+  * its planner already holds). Either way:
   *
-  *  - ZERO filesystem listing per scan: file paths AND sizes come from
-  *    manifest rows (the commit already recorded them), so planning a
-  *    scan costs one streamed manifest read instead of a `getFileStatus`
-  *    round-trip per data file — at 10^6 files that is the difference
+  *  - ZERO filesystem listing: file paths AND sizes come from the rows
+  *    (the commit already recorded them) — no `getFileStatus` per data
+  *    file and no listing job; at 10^6 files that is the difference
   *    between a metadata read and 10^6 RPCs per action;
   *  - data-filter pruning inside the planner: `scan().filter($"doc_id"
-  *    === x)` skips every file whose manifest [min,max] excludes x
-  *    BEFORE any split is planned — clustering (M2) exists precisely to
-  *    make these prunes selective, and with this index they fire for
-  *    plain DataFrame/SQL filters, not just the scanPruned API;
+  *    === x)` skips every file whose [min,max] excludes x BEFORE any
+  *    split is planned — clustering (M2) exists precisely to make these
+  *    prunes selective, and they fire for plain DataFrame/SQL filters;
   *  - streamed, filter-first materialization: manifest rows stream one
   *    at a time ([[Manifests.readLocal]]) with the translated predicate
   *    applied on the fly, so a selective scan materializes only the
@@ -40,9 +41,10 @@ class ManifestFileIndex(
     spark: SparkSession,
     location: String,
     snapshot: Snapshot,
-    excludePaths: Set[String] = Set.empty) extends FileIndex {
+    excludePaths: Set[String] = Set.empty,
+    files: Option[Seq[DataFile]] = None) extends FileIndex {
 
-  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private lazy val hadoopConf = spark.sessionState.newHadoopConf()
 
   override def rootPaths: Seq[Path] = Seq(new Path(location))
 
@@ -54,12 +56,14 @@ class ManifestFileIndex(
     * constructor that throws mid-stream must not strand the manifest
     * reader's open handle.
     */
-  private def withFiles[A](use: Iterator[DataFile] => A): A = {
-    val it = Manifests.stream(location, snapshot.manifests, hadoopConf)
-    try use(
-      if (excludePaths.isEmpty) it
-      else it.filter(f => !excludePaths.contains(f.path)))
-    finally it.close()
+  private def withFiles[A](use: Iterator[DataFile] => A): A = files match {
+    case Some(fs) => use(fs.iterator)
+    case None =>
+      val it = Manifests.stream(location, snapshot.manifests, hadoopConf)
+      try use(
+        if (excludePaths.isEmpty) it
+        else it.filter(f => !excludePaths.contains(f.path)))
+      finally it.close()
   }
 
   private def status(f: DataFile): FileStatusWithMetadata =

@@ -121,19 +121,32 @@ class TokenTable(val location: String, val spark: SparkSession) {
     * complement path list: the exclusion set is bounded (the carry set
     * is capped), the complement streams through the FileIndex.
     */
-  def scanExcluding(s: Snapshot, excluded: Set[String]): DataFrame = {
+  def scanExcluding(s: Snapshot, excluded: Set[String]): DataFrame =
+    relation(new ManifestFileIndex(spark, location, s, excluded), Format.schemaOf(s))
+
+  /** Read exactly `files` — rows a maintenance planner already holds
+    * (its decode set, a sample, a bin) — through the same
+    * [[ManifestFileIndex]] as every scan: sizes from the rows, no
+    * listing, `s`'s schema pinned. An empty list reads as an empty
+    * frame. Columns read nullable, the layout every engine-written file
+    * carries (see [[writeDataFilesTo]]), so a rewrite of these rows
+    * needs no widening projection.
+    */
+  def read(s: Snapshot, files: Seq[DataFile]): DataFrame =
+    relation(new ManifestFileIndex(spark, location, s, files = Some(files)),
+      StructType(TokenTable.nullableFields(Format.schemaOf(s))))
+
+  private def relation(index: ManifestFileIndex, dataSchema: StructType): DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val dataSchema = Format.schemaOf(s)
     val classicSpark = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val relation = HadoopFsRelation(
-      location = new ManifestFileIndex(spark, location, s, excluded),
+    classicSpark.baseRelationToDataFrame(HadoopFsRelation(
+      location = index,
       partitionSchema = new StructType(),
       dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(classicSpark)
-    classicSpark.baseRelationToDataFrame(relation)
+      options = Map.empty)(classicSpark))
   }
 
   /** INCREMENTAL (CDC-style) read: the rows ADDED in `(fromVersion,
@@ -167,37 +180,6 @@ class TokenTable(val location: String, val spark: SparkSession) {
         "rewrite commit (compact/cluster/merge/delete/update), so the " +
         "file delta does not equal the row delta — re-sync from a full scan")
     scan(to.copy(manifests = to.manifests.drop(from.manifests.length)))
-  }
-
-  /** Pruned scan: only data files whose manifest [min,max] stats can
-    * contain matching rows (the mechanism MERGE uses to touch only
-    * affected files; clustering exists to make these prunes selective).
-    * Returns the pruned DataFrame and how many files were skipped.
-    */
-  def scanPruned(keep: DataFile => Boolean): (DataFrame, Int, Int) = {
-    val all = filesLocal(current)
-    val hits = all.filter(keep)
-    val df =
-      if (hits.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(hits.map(f => s"$location/${f.path}"): _*)
-    (df, hits.size, all.size)
-  }
-
-  def scanPrunedByDocId(lo: String, hi: String): DataFrame =
-    scanPruned(f => f.maxDocId >= lo && f.minDocId <= hi)._1
-      .filter($"doc_id" >= lo && $"doc_id" <= hi)
-
-  /** Source-equality scan with manifest pruning + parquet pushdown. */
-  def scanWhereSource(s: String): (DataFrame, Int, Int) = {
-    val (df, read, total) = scanPruned(f => f.minSource <= s && s <= f.maxSource)
-    (df.filter($"source" === s), read, total)
-  }
-
-  /** Token-length range scan with manifest pruning. */
-  def scanWhereNtok(lo: Int, hi: Int): (DataFrame, Int, Int) = {
-    val (df, read, total) = scanPruned(f => f.maxNtok >= lo && f.minNtok <= hi)
-    (df.filter($"n_tok" >= lo && $"n_tok" <= hi), read, total)
   }
 
   // ---------------------------------------------------------------- write
@@ -335,12 +317,10 @@ class TokenTable(val location: String, val spark: SparkSession) {
   }
 
   /** Persist manifest rows as an immutable manifest parquet; returns its
-    * table-relative path.
-    */
-  /** Driver-side write ([[Manifests.writeLocal]]) — a metadata op must
-    * not schedule a Spark job; the old `toDS().write` form cost a fixed
-    * ~0.3 s of job scheduling per commit (pure serial floor under
-    * 24-commit ingest).
+    * table-relative path. Driver-side write ([[Manifests.writeLocal]]) —
+    * a metadata op must not schedule a Spark job; the old `toDS().write`
+    * form cost a fixed ~0.3 s of job scheduling per commit (pure serial
+    * floor under 24-commit ingest).
     */
   def writeManifest(rows: Seq[DataFile]): String = {
     val rel = s"${Format.Metadata}/manifest-${java.util.UUID.randomUUID()}"
@@ -368,8 +348,8 @@ class TokenTable(val location: String, val spark: SparkSession) {
     *   [[CommitConflictException]] so the caller re-plans — matching
     *   Iceberg's serializable snapshot isolation and the reference's
     *   exhausted-retry hard error (`src/kafka/mod.rs:224-228`).
-    */
-  /** @param rebaseGuard invoked with the rebased-onto snapshot before an
+    *
+    * @param rebaseGuard invoked with the rebased-onto snapshot before an
     *        append auto-rebase; throw [[CommitConflictException]] to veto
     *        (e.g. ingest aborts when the concurrent commit already covers
     *        this batch's offsets — see Ingest.ingestBatch).
@@ -528,7 +508,6 @@ object TokenTable {
     */
   val RowGroupBytes: Long = 32L * 1024 * 1024
 
-  /** The north-star schema (BASELINE.json input_hint). */
   /** [[tokenSchema]] with every field (and array element) nullable —
     * the CANONICAL parquet repetition layout of engine-written files
     * (see writeDataFilesTo).
@@ -544,6 +523,7 @@ object TokenTable {
       })
     }
 
+  /** The north-star schema (BASELINE.json input_hint). */
   val tokenSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("tokens", ArrayType(IntegerType, containsNull = false), nullable = false),

@@ -18,7 +18,8 @@ class ClusterSampleSpec extends SparkSpec {
 
   test("pickSampleFiles caps the subset, spreads it, and sums its rows") {
     val files = (0 until 1000).map(df)
-    val (paths, rows) = Cluster.pickSampleFiles(files.iterator, 1000, 64)
+    val (picked, rows) = Cluster.pickSampleFiles(files.iterator, 1000, 64)
+    val paths = picked.map(_.path)
     assert(paths.size <= 64 && paths.size >= 32, s"got ${paths.size}")
     // Spread: every 16th of the stream, so indices cover the full range.
     assert(paths.head == "data/f0000.parquet")

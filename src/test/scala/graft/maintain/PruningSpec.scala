@@ -3,12 +3,28 @@ package graft.maintain
 import graft.SparkSpec
 import graft.ingest.TokenGen
 import graft.table.TokenTable
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.col
 
 /** The point of clustering: after Z-order, stats-based pruning skips
   * files for source / n_tok predicates that pre-clustering layouts
   * cannot skip — and pruned results equal unpruned results exactly.
   */
 class PruningSpec extends SparkSpec {
+
+  /** `t.scan().filter(cond)`, the number of files its scan read (the
+    * index's pruned count, the scan's `numFiles` metric) and the
+    * snapshot's file total.
+    */
+  private def scanWhere(t: TokenTable, cond: Column): (DataFrame, Long, Int) = {
+    val df = t.scan().filter(cond)
+    // collect() runs THIS Dataset's plan, which fills its metrics.
+    df.collect()
+    val scan = df.queryExecution.executedPlan.collectLeaves()
+      .collectFirst { case s: FileSourceScanExec => s }.get
+    (df, scan.metrics("numFiles").value, t.filesLocal(t.current).size)
+  }
 
   test("zorder makes source and n_tok scans prune files; results stay exact") {
     val dir = tmpDir("prune")
@@ -18,21 +34,20 @@ class PruningSpec extends SparkSpec {
         spark, 400, idOffset = i * 400L, numPartitions = 2)))
     }
     // Pre-clustering: every file spans all sources -> no pruning possible.
-    val (_, preRead, preTotal) = t.scanWhereSource("forums")
+    val (_, preRead, preTotal) = scanWhere(t, col("source") === "forums")
     assert(preRead == preTotal, "random layout should not prune (sanity)")
-    val expectSrc = checksum(t.scan().filter(org.apache.spark.sql.functions
-      .col("source") === "forums"))
-    val expectLen = checksum(t.scan().filter(org.apache.spark.sql.functions
-      .col("n_tok") <= 32))
+    val expectSrc = checksum(t.scan().filter(col("source") === "forums"))
+    val expectLen = checksum(t.scan().filter(col("n_tok") <= 32))
 
     Cluster.run(t, Cluster.ZOrder, "job-prune", targetBytes = 48L * 1024)
 
-    val (srcDf, srcRead, srcTotal) = t.scanWhereSource("forums")
+    val (srcDf, srcRead, srcTotal) = scanWhere(t, col("source") === "forums")
     assert(srcRead < srcTotal,
       s"source scan must prune after zorder: read $srcRead of $srcTotal")
     assert(checksum(srcDf) == expectSrc, "pruning must not change results")
 
-    val (lenDf, lenRead, lenTotal) = t.scanWhereNtok(16, 32)
+    val (lenDf, lenRead, lenTotal) =
+      scanWhere(t, col("n_tok") >= 16 && col("n_tok") <= 32)
     assert(lenRead < lenTotal,
       s"n_tok scan must prune after zorder: read $lenRead of $lenTotal")
     assert(checksum(lenDf) == expectLen)

@@ -79,9 +79,15 @@ class TableSpec extends SparkSpec {
     t.append(TokenGen.asTokenRows(TokenGen.generate(spark, 200, numPartitions = 1)))
     t.append(TokenGen.asTokenRows(
       TokenGen.generate(spark, 200, idOffset = 1000000, numPartitions = 1)))
-    val pruned = t.scanPrunedByDocId("doc_000001000000", "doc_000001000199")
-    assert(pruned.count() == 200)
     import org.apache.spark.sql.functions.col
+    val pruned = t.scan()
+      .filter(col("doc_id") >= "doc_000001000000" && col("doc_id") <= "doc_000001000199")
+    // collect() runs THIS Dataset's plan, which fills the scan's metrics.
+    assert(pruned.collect().length == 200)
+    val scan = pruned.queryExecution.executedPlan.collectLeaves()
+      .collectFirst { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.get
+    assert(scan.metrics("numFiles").value < t.filesLocal(t.current).size,
+      "the first append's files hold no id in range and must be pruned")
     assert(pruned.filter(col("doc_id") < "doc_000001000000").count() == 0)
   }
 
