@@ -12,12 +12,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * `z_interleave(a, b, c)` / `hilbert_index(a, b, c)` in SQL text —
   * the public, supported way to ship custom Catalyst expressions
   * (vs session-local temp-function registration in
-  * [[graft.functions.CurveKeys.register]]).
+  * [[graft.functions.CurveKeys.register]]). It also injects the
+  * `graft.` table rules: [[graft.plans.TokenTableResolution]] (reads by
+  * path, MERGE/DELETE/UPDATE) and [[graft.sql.CatalogScanRewrite]]
+  * (catalog-resolved reads plan through the engine's own relation).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(session =>
       graft.plans.TokenTableResolution(
+        session.asInstanceOf[org.apache.spark.sql.SparkSession]))
+    ext.injectOptimizerRule(session =>
+      graft.sql.CatalogScanRewrite(
         session.asInstanceOf[org.apache.spark.sql.SparkSession]))
     ext.injectFunction((
       new FunctionIdentifier("z_interleave"),

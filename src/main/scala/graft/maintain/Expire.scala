@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * listing collects. Then every data file and manifest dir on disk
   * that no retained snapshot reaches, and that is older than the grace
   * cutoff, is deleted; a concurrent reader of a retained snapshot
-  * never loses a file.
+  * never loses a file. The deleted manifest dirs leave the
+  * decoded-manifest cache ([[Manifests.evict]]).
   *
   * The orphan set is `onDisk − reachable`, computed one of two ways:
   *  - **on the driver, with no Spark job**, while both the streamed
@@ -189,18 +190,29 @@ object Expire {
 
     val cutoff = System.currentTimeMillis() - graceMs
     val rootStr = Paths.get(table.location).toAbsolutePath.toString
-    val deleted = driverOrphans(table, manifestDirs, driverLimit) match {
-      case Some(orphans) => orphans.count(deleteIfStale(rootStr, _, cutoff)).toLong
+    val manifestPrefix = s"${Format.Metadata}/manifest-"
+    val (deleted, deletedManifests) = driverOrphans(table, manifestDirs, driverLimit) match {
+      case Some(orphans) =>
+        val gone = orphans.filter(deleteIfStale(rootStr, _, cutoff))
+        (gone.size.toLong, gone.filter(_.startsWith(manifestPrefix)))
       case None =>
         // A path is orphaned only if no retained manifest references it
-        // and it is not a retained manifest dir.
-        listing(table).except(reachable(table, manifestDirs))
+        // and it is not a retained manifest dir. Each task reports its
+        // delete count and the manifest dirs among its deletes.
+        val perTask = listing(table).except(reachable(table, manifestDirs))
           .mapPartitions { it =>
             var n = 0L
-            it.foreach(rel => if (deleteIfStale(rootStr, rel, cutoff)) n += 1)
-            Iterator.single(n)
-          }.collect().sum
+            val manifests = Seq.newBuilder[String]
+            it.foreach(rel => if (deleteIfStale(rootStr, rel, cutoff)) {
+              n += 1
+              if (rel.startsWith(manifestPrefix)) manifests += rel
+            })
+            Iterator.single((n, manifests.result()))
+          }.collect()
+        (perTask.map(_._1).sum, perTask.toSeq.flatMap(_._2))
     }
+    Manifests.evict(deletedManifests.map(m => s"${table.location}/$m"),
+      spark.sessionState.newHadoopConf())
     Result(expired, deleted)
   }
 }

@@ -4,6 +4,7 @@ import graft.table.{Format, Snapshot, TokenTable}
 import java.util
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column => SqlColumn, DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -31,9 +32,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The catalog is PATH-BASED (like `delta.`/path``): the identifier IS
   * the table location; there is no namespace metadata to list.
   *
-  * Read path: a DSv2 scan that falls back to V1 ([[V1Scan]]) by
-  * replaying pushed filters and column pruning onto the engine's own
-  * [[TokenTable.scan]] DataFrame — so catalog reads go through the SAME
+  * Read path: with [[graft.GraftExtensions]], [[CatalogScanRewrite]]
+  * replaces the catalog-resolved relation with the engine's own
+  * [[TokenTable.scanLogical]] relation, planned once. A catalog-only
+  * session gets a DSv2 scan that falls back to V1 ([[V1Scan]]) by
+  * replaying pushed filters and column pruning onto that same scan as
+  * an inner query. Either way catalog reads go through the SAME
   * [[graft.table.ManifestFileIndex]] file pruning and parquet pushdown
   * as API reads, rather than a parallel (and slower) DSv2 reader stack.
   * Write path: [[V1Write]] → [[InsertableRelation]] → `TokenTable.append`
@@ -209,13 +213,19 @@ class GraftTable(val location: String, versionAsOf: Option[Long])
     * pinned snapshot.
     */
   private[sql] def innerScan(spark: SparkSession): DataFrame =
-    TokenTable.open(spark, location).scanLogical(pinned)
+    new TokenTable(location, spark).scanLogical(pinned)
 
   /** The pinned snapshot (for metadata-only answers). */
   private[sql] def pinnedSnapshot: Snapshot = pinned
 
-  /** The pinned snapshot's PHYSICAL schema (storage names). */
-  private[sql] def physicalSchema: StructType = physSchema
+  /** Logical name (lowercased) → physical storage name. Aggregate
+    * pushdown reasons about PHYSICAL columns (stats and non-null
+    * guarantees attach to storage columns, and a user-added nullable
+    * column can never shadow them — SchemaEvolution reserves the core
+    * names).
+    */
+  private[sql] lazy val logicalToPhysical: Map[String, String] =
+    graft.table.SchemaEvolution.logicalToPhysical(physSchema)
 }
 
 /** Scan builder: collects column pruning + pushable filters, then falls
@@ -241,19 +251,12 @@ class GraftScanBuilder(table: GraftTable) extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
   private val logicalSchema: StructType = table.schema()
-  /** logical name (lowercased) → physical storage name; aggregate
-    * pushdown reasons about PHYSICAL columns (stats and non-null
-    * guarantees attach to storage columns, and a user-added nullable
-    * column can never shadow them — SchemaEvolution reserves the core
-    * names).
-    */
-  private val l2p: Map[String, String] =
-    graft.table.SchemaEvolution.logicalToPhysical(table.physicalSchema)
+  private val l2p = table.logicalToPhysical
   private def phys(logical: String): Option[String] = l2p.get(logical.toLowerCase)
 
   private var required: StructType = logicalSchema
   private var pushed: Array[Filter] = Array.empty
-  private var aggResult: Option[(StructType, Row)] = None
+  private var aggResult: Option[(StructType, InternalRow)] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     if (aggResult.isEmpty) required = requiredSchema
@@ -268,35 +271,14 @@ class GraftScanBuilder(table: GraftTable) extends ScanBuilder
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate._
+  import GraftScanBuilder.colName
 
-  private def colName(e: org.apache.spark.sql.connector.expressions.Expression)
-      : Option[String] = e match {
-    case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames()(0))
-    case _ => None
-  }
-
-  /** Shape-only check (no IO): every aggregate a stats-answerable
-    * function, no grouping, no pushed filters.
+  /** Shape-only check (no IO): stats-answerable aggregates and no
+    * pushed filters.
     */
   private def plannableAggs(agg: Aggregation): Boolean =
-    agg.groupByExpressions().isEmpty && pushed.isEmpty &&
-      agg.aggregateExpressions().forall {
-        case _: CountStar => true
-        // COUNT(col) == COUNT(*) only for the never-null CORE columns —
-        // resolved through the rename map so a renamed core column still
-        // pushes down and an ADDED (nullable) column never does.
-        case c: Count => !c.isDistinct && colName(c.column())
-          .flatMap(phys).exists(graft.table.SchemaEvolution.CoreFields)
-        case m: Min => colName(m.column())
-          .flatMap(phys).exists(Set("doc_id", "source", "n_tok"))
-        case m: Max => colName(m.column())
-          .flatMap(phys).exists(Set("doc_id", "source", "n_tok"))
-        case s: Sum => !s.isDistinct &&
-          colName(s.column()).flatMap(phys).contains("n_tok")
-        case _ => false
-      }
+    pushed.isEmpty && GraftScanBuilder.statsAnswerable(agg, l2p)
 
   override def supportCompletePushDown(agg: Aggregation): Boolean =
     plannableAggs(agg)
@@ -366,7 +348,8 @@ class GraftScanBuilder(table: GraftTable) extends ScanBuilder
     val schema = StructType(cols.zipWithIndex.map { case (c, i) =>
       org.apache.spark.sql.types.StructField(s"agg_$i", c.get._1, nullable = true)
     })
-    aggResult = Some((schema, Row.fromSeq(cols.map(_.get._2).toIndexedSeq)))
+    aggResult = Some((schema, InternalRow.fromSeq(cols.map(_.get._2).toIndexedSeq
+      .map(CatalystTypeConverters.convertToCatalyst))))
     true
   }
 
@@ -381,9 +364,11 @@ class GraftScanBuilder(table: GraftTable) extends ScanBuilder
           case Some((s, _)) => s
           case None => if (required.isEmpty) new StructType() else required
         }
+        // Rows leave as InternalRow: no decode to Row and back.
+        override def needConversion: Boolean = false
         override def buildScan(): RDD[Row] = {
           val spark = context.sparkSession
-          aggResult match {
+          val rows: RDD[InternalRow] = aggResult match {
             case Some((_, row)) =>
               // Metadata-only answer: one row, zero data IO.
               spark.sparkContext.parallelize(Seq(row), 1)
@@ -393,14 +378,48 @@ class GraftScanBuilder(table: GraftTable) extends ScanBuilder
               val out =
                 if (required.isEmpty) df.select()
                 else df.select(required.fieldNames.map(col).toIndexedSeq: _*)
-              out.rdd
+              out.queryExecution.toRdd
           }
+          rows.asInstanceOf[RDD[Row]]
         }
       }.asInstanceOf[T]
   }
 }
 
 object GraftScanBuilder {
+  import org.apache.spark.sql.connector.expressions.NamedReference
+  import org.apache.spark.sql.connector.expressions.aggregate._
+
+  private[sql] def colName(e: org.apache.spark.sql.connector.expressions.Expression)
+      : Option[String] = e match {
+    case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames()(0))
+    case _ => None
+  }
+
+  /** Can manifest stats alone answer `agg`: no grouping, and every
+    * aggregate a stats-answerable function of a column, looked up
+    * through `l2p` (logical name, lowercased, to physical name)? Shared
+    * by [[GraftScanBuilder]]'s pushdown and [[CatalogScanRewrite]], which
+    * leaves exactly these reads to it.
+    */
+  def statsAnswerable(agg: Aggregation, l2p: Map[String, String]): Boolean = {
+    def phys(e: org.apache.spark.sql.connector.expressions.Expression) =
+      colName(e).flatMap(c => l2p.get(c.toLowerCase))
+    agg.groupByExpressions().isEmpty &&
+      agg.aggregateExpressions().forall {
+        case _: CountStar => true
+        // COUNT(col) == COUNT(*) only for the never-null CORE columns —
+        // resolved through the rename map so a renamed core column still
+        // pushes down and an ADDED (nullable) column never does.
+        case c: Count => !c.isDistinct &&
+          phys(c.column()).exists(graft.table.SchemaEvolution.CoreFields)
+        case m: Min => phys(m.column()).exists(Set("doc_id", "source", "n_tok"))
+        case m: Max => phys(m.column()).exists(Set("doc_id", "source", "n_tok"))
+        case s: Sum => !s.isDistinct && phys(s.column()).contains("n_tok")
+        case _ => false
+      }
+  }
+
   /** Conservative V1-filter → Column translation; None = not pushed
     * (Spark evaluates it above the scan; correctness unaffected).
     */

@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    split is planned — clustering (M2) exists precisely to make these
   *    prunes selective, and they fire for plain DataFrame/SQL filters;
   *  - streamed, filter-first materialization: manifest rows stream one
-  *    at a time ([[Manifests.readLocal]]) with the translated predicate
+  *    at a time ([[Manifests.stream]]) with the translated predicate
   *    applied on the fly, so a selective scan materializes only the
   *    SURVIVING files' statuses on the driver. (An unfiltered scan still
   *    holds one compact status per file — Spark's scheduler needs the

@@ -81,6 +81,9 @@ object Manifests {
       g.append("groups", f.groups)
       writer.write(g)
     } finally writer.close()
+    // Write-through: the planner that runs right after this commit
+    // reads the rows it just wrote without decoding them back.
+    remember(key(absDir, conf), rows.toArray)
   }
 
   /** An Iterator that can be CLOSED before exhaustion. Every manifest
@@ -101,16 +104,11 @@ object Manifests {
     * on a mid-stream read failure (ADVICE r3), and on `close()` for
     * early-abandoning callers.
     */
-  def readLocal(absDir: String, conf: Configuration): CloseableIterator[DataFile] = {
+  private def readLocal(absDir: String, conf: Configuration): CloseableIterator[DataFile] = {
     val dir = new org.apache.hadoop.fs.Path(absDir)
     val fs = dir.getFileSystem(conf)
-    // A snapshot's manifests outlive the snapshot (GC only collects
-    // manifests unreachable from every RETAINED version), so a missing
-    // dir is corruption: fail loudly — a silent empty iterator would
-    // turn a damaged table into a plausible-looking empty scan.
-    if (!fs.exists(dir))
-      throw new java.io.FileNotFoundException(
-        s"manifest directory missing (table corruption?): $absDir")
+    requireDir(fs, dir, absDir)
+    decodes.incrementAndGet()
     val parts = fs.listStatus(dir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
@@ -172,9 +170,11 @@ object Manifests {
   }
 
   /** Stream a whole SNAPSHOT'S inventory: the concatenation of its
-    * manifests' rows, one manifest at a time, closeable mid-stream.
-    * Shared by [[TokenTable.filesStream]] and [[ManifestFileIndex]] so
-    * there is one implementation of the cross-manifest handle handoff.
+    * manifests' rows, one manifest at a time, closeable mid-stream, each
+    * manifest served from the decoded-manifest cache when it is there.
+    * Shared by [[TokenTable.filesStream]], [[ManifestFileIndex]] and
+    * Expire's reachable set, so there is one implementation of the
+    * cross-manifest handle handoff and one place that decodes manifests.
     */
   def stream(location: String, manifests: Seq[String],
       conf: Configuration): CloseableIterator[DataFile] =
@@ -188,7 +188,7 @@ object Manifests {
         while (cur == null || !cur.hasNext) {
           if (cur != null) { cur.close(); cur = null }
           if (!mans.hasNext) return false
-          cur = readLocal(s"$location/${mans.next()}", conf)
+          cur = open(s"$location/${mans.next()}", conf)
         }
         true
       }
@@ -203,4 +203,119 @@ object Manifests {
         if (cur != null) { cur.close(); cur = null }
       }
     }
+
+  // ------------------------------------------------ decoded-manifest cache
+
+  /** Decoded manifest rows by qualified manifest dir, JVM-wide. A
+    * manifest dir (`manifest-<uuid>`) is written once and never
+    * rewritten, so its rows never go stale; the only event that ends
+    * an entry's truth is the dir's deletion, which Expire evicts and
+    * every hit re-checks ([[requireDir]]). Least-recently-used entries
+    * go first once the total passes [[TokenTable.ManifestCacheBytes]];
+    * a manifest larger than that bound is never held and streams off
+    * its parquet parts on every read.
+    */
+  private final class Entry(val rows: Array[DataFile], val bytes: Long)
+  private val cache = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+  private var cachedBytes = 0L
+  private val decodes = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Manifest dirs decoded from parquet (cache misses) since JVM start. */
+  def decodeCount: Long = decodes.get()
+
+  /** Whether `absDir`'s rows are held decoded. */
+  def isCached(absDir: String, conf: Configuration): Boolean =
+    cache.synchronized(cache.containsKey(key(absDir, conf)))
+
+  /** Drop the entries of manifest dirs that were deleted. */
+  def evict(absDirs: Iterable[String], conf: Configuration): Unit = {
+    val keys = absDirs.map(key(_, conf))
+    cache.synchronized(keys.foreach(forget))
+  }
+
+  /** A snapshot's manifests outlive the snapshot (GC only collects
+    * manifests unreachable from every RETAINED version), so a missing
+    * dir is corruption: fail loudly, on a cache hit as on a miss — a
+    * silent empty iterator (or stale cached rows) would turn a damaged
+    * table into a plausible-looking scan.
+    */
+  private def requireDir(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, absDir: String): Unit =
+    if (!fs.exists(dir))
+      throw new java.io.FileNotFoundException(
+        s"manifest directory missing (table corruption?): $absDir")
+
+  private def key(absDir: String, conf: Configuration): String = {
+    val dir = new org.apache.hadoop.fs.Path(absDir)
+    dir.getFileSystem(conf).makeQualified(dir).toString
+  }
+
+  /** Heap one decoded row holds: the object plus its strings. */
+  private def heapBytes(f: DataFile): Long = {
+    def str(s: String): Long = if (s == null) 0L else 40L + s.length
+    80L + str(f.path) + str(f.minDocId) + str(f.maxDocId) +
+      str(f.minSource) + str(f.maxSource)
+  }
+
+  private def forget(k: String): Unit = {
+    val old = cache.remove(k)
+    if (old != null) cachedBytes -= old.bytes
+  }
+
+  private def remember(k: String, rows: Array[DataFile]): Unit = {
+    val bytes = rows.iterator.map(heapBytes).sum
+    if (bytes <= TokenTable.ManifestCacheBytes) cache.synchronized {
+      forget(k)
+      val lru = cache.values().iterator()
+      while (cachedBytes + bytes > TokenTable.ManifestCacheBytes && lru.hasNext) {
+        cachedBytes -= lru.next().bytes
+        lru.remove()
+      }
+      cache.put(k, new Entry(rows, bytes))
+      cachedBytes += bytes
+    }
+  }
+
+  /** One manifest's rows: from the cache after a stat of the dir, or
+    * decoded off its parquet parts, kept once the stream is drained
+    * within the byte bound (an abandoned stream keeps nothing).
+    */
+  private def open(absDir: String, conf: Configuration): CloseableIterator[DataFile] = {
+    val dir = new org.apache.hadoop.fs.Path(absDir)
+    val fs = dir.getFileSystem(conf)
+    val k = fs.makeQualified(dir).toString
+    val entry = cache.synchronized(cache.get(k))
+    if (entry != null) {
+      try requireDir(fs, dir, absDir)
+      catch { case e: java.io.FileNotFoundException => cache.synchronized(forget(k)); throw e }
+      new CloseableIterator[DataFile] {
+        private var rows = entry.rows.iterator
+        override def hasNext: Boolean = rows.hasNext
+        override def next(): DataFile = rows.next()
+        override def close(): Unit = rows = Iterator.empty
+      }
+    } else {
+      val rows = readLocal(absDir, conf)
+      new CloseableIterator[DataFile] {
+        private var kept = Array.newBuilder[DataFile]
+        private var bytes = 0L
+        override def hasNext: Boolean = {
+          val more = rows.hasNext
+          if (!more && kept != null) { remember(k, kept.result()); kept = null }
+          more
+        }
+        override def next(): DataFile = {
+          val f =
+            try rows.next()
+            catch { case t: Throwable => kept = null; throw t }
+          if (kept != null) {
+            bytes += heapBytes(f)
+            if (bytes <= TokenTable.ManifestCacheBytes) kept += f else kept = null
+          }
+          f
+        }
+        override def close(): Unit = { kept = null; rows.close() }
+      }
+    }
+  }
 }

@@ -47,8 +47,9 @@ class TokenTable(val location: String, val spark: SparkSession) {
   def filesLocal(s: Snapshot): Seq[DataFile] = filesStream(s).toSeq
 
   /** STREAM the snapshot's manifest rows on the driver, one row at a
-    * time ([[Manifests.readLocal]]) — O(1) memory regardless of file
-    * count. This is how maintenance planning walks the inventory: a
+    * time ([[Manifests.stream]]) — memory bounded by the manifest cache
+    * ([[TokenTable.ManifestCacheBytes]]), not by the file count. This
+    * is how maintenance planning walks the inventory: a
     * 10^7-file snapshot streams through a bounded-memory pass instead of
     * materializing a 10^7-element Seq. Callers that DRAIN (or whose
     * read fails) need nothing more; a caller that abandons the stream
@@ -507,6 +508,13 @@ object TokenTable {
     * for merge cold copy and scheduler splits.
     */
   val RowGroupBytes: Long = 32L * 1024 * 1024
+
+  /** Heap the JVM-wide decoded-manifest cache may hold
+    * ([[Manifests]]): about 200k manifest rows, i.e. tables of that many
+    * live files plan from memory. A single manifest above it is never
+    * cached and streams off disk on every read.
+    */
+  val ManifestCacheBytes: Long = 64L * 1024 * 1024
 
   /** [[tokenSchema]] with every field (and array element) nullable —
     * the CANONICAL parquet repetition layout of engine-written files

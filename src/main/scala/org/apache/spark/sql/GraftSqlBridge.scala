@@ -28,6 +28,17 @@ object GraftSqlBridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The DSv2 aggregate a scan would be asked to push, as Spark's own
+    * scan push-down translates it (`translateAggregation` is
+    * protected[sql]); None when it has no DSv2 form.
+    */
+  def translateAggregation(
+      aggs: Seq[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression],
+      groupBy: Seq[Expression])
+      : Option[org.apache.spark.sql.connector.expressions.aggregate.Aggregation] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateAggregation(aggs, groupBy)
+
   /** Register a temp SQL function backed by a native expression builder,
     * so `spark.sql("... z_interleave(a, b, c) ...")` plans the codegen'd
     * expression directly.

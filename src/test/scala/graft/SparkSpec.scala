@@ -17,6 +17,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
 
+  /** Run `f` in a session with the `graft` catalog AND
+    * [[graft.GraftExtensions]] (the SQL DML rules and the catalog-read
+    * rewrite), sharing this spec's SparkContext; the shared session is
+    * restored afterwards.
+    */
+  def withExtensions[A](f: SparkSession => A): A = {
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
+      .withExtensions(new GraftExtensions())
+      .getOrCreate()
+    try f(s2) finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   /** Order-insensitive full-table checksum — the byte-equal token-array
     * invariant (BASELINE.json input_hint): (row count, sum n_tok,
     * wrap-around sum of xxhash64(doc_id, tokens, n_tok, source)).

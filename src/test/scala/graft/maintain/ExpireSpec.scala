@@ -2,7 +2,7 @@ package graft.maintain
 
 import graft.SparkSpec
 import graft.ingest.TokenGen
-import graft.table.{Format, TokenTable}
+import graft.table.{Format, Manifests, TokenTable}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.GraftSqlBridge
@@ -62,15 +62,29 @@ class ExpireSpec extends SparkSpec {
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 
+  /** Cache state of the manifest dirs among `paths` (table-relative). */
+  private def cachedManifests(t: TokenTable, paths: Set[String]): Map[String, Boolean] =
+    paths.filter(_.startsWith(s"${Format.Metadata}/manifest-")).map(m =>
+      m -> Manifests.isCached(s"${t.location}/$m", spark.sessionState.newHadoopConf())).toMap
+
   test("below the inventory threshold Expire runs zero Spark jobs") {
     val t = compactedTable("expire-jobs")
     plantAbortedJob(t, "aborted-job", 3)
     val before = checksum(t.scan())
+    val oldest = t.snapshotAt(1)
+    assert(checksum(t.scan(oldest))._1 == 200) // its manifests are cached
+    val onDiskBefore = onDisk(t)
     val (res, jobs) = jobsIn("expire")(Expire.run(t, retainLast = 1, graceMs = 0))
     assert(jobs == 0, s"$jobs Spark jobs for a driver-sized expiry")
     assert(res.expiredSnapshots.nonEmpty && res.deletedFiles > 3)
     assert(!Files.exists(Paths.get(t.location, "data/aborted-job/part-00000.parquet")))
     assert(checksum(t.scan()) == before)
+    // The deleted manifest dirs left the cache, and the expired version
+    // fails to read as it did before there was a cache.
+    val evicted = cachedManifests(t, onDiskBefore -- onDisk(t))
+    assert(oldest.manifests.forall(evicted.contains) && evicted.values.forall(!_), evicted)
+    intercept[Exception](t.snapshotAt(1))
+    intercept[java.io.FileNotFoundException](checksum(t.scan(oldest)))
   }
 
   test("driver and distributed branches delete the identical path set") {
@@ -101,6 +115,9 @@ class ExpireSpec extends SparkSpec {
     val (onDiskA, onDiskB) = (onDisk(a), onDisk(b))
     assert(onDiskA == onDiskB)
 
+    // Every manifest of both twins is cached before the expiry.
+    Seq(a, b).foreach(t => Format.liveVersions(t.location).foreach(v =>
+      t.filesLocal(t.snapshotAt(v))))
     val (resA, jobsA) = jobsIn("expire-distributed")(
       Expire.run(a, retainLast = 2, graceMs = hourMs, driverLimit = 0))
     val (resB, jobsB) = jobsIn("expire-driver")(
@@ -110,6 +127,9 @@ class ExpireSpec extends SparkSpec {
     val deletedA = onDiskA -- onDisk(a)
     val deletedB = onDiskB -- onDisk(b)
     assert(deletedA == deletedB)
+    // Both branches evict the manifest dirs they delete.
+    assert(cachedManifests(a, deletedA).values.forall(!_))
+    assert(cachedManifests(b, deletedB).values.forall(!_))
     assert(resA == resB)
     assert(resA.expiredSnapshots == (0L until a.current.version - 1))
     assert((0 until 5).forall(i => deletedA(f"data/aborted-job/part-$i%05d.parquet")))

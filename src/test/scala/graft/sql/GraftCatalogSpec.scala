@@ -3,7 +3,6 @@ package graft.sql
 import graft.SparkSpec
 import graft.ingest.TokenGen
 import graft.table.TokenTable
-import org.apache.spark.sql.SparkSession
 
 /** DSv2 `graft` catalog (VERDICT r3 task 5): CREATE / INSERT / SELECT /
   * VERSION AS OF / DROP as plain SQL through the registered catalog, and
@@ -183,16 +182,7 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("catalog + extensions session: plain spark.sql MERGE INTO, no manual rule") {
-    val base = spark // force shared-session init before we detach
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
-      .withExtensions(new graft.GraftExtensions())
-      .getOrCreate()
-    try {
+    withExtensions { s2 =>
       val loc = tmpDir("cat_merge")
       s2.sql(s"CREATE TABLE graft.`$loc` $ddlCols")
       TokenGen.asTokenRows(TokenGen.generate(s2, 100, numPartitions = 2))
@@ -235,9 +225,6 @@ class GraftCatalogSpec extends SparkSpec {
         s"UPDATE graft.`$loc` SET source = 'u' WHERE n_tok = 3").collect()(0)
       assert(upd.getLong(1) == 10L, s"UPDATE must report the 10 merged rows, got $upd")
       assert(t.scan().filter($"source" === "u").count() == 10)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
     }
   }
 }

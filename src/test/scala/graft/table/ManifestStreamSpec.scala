@@ -22,6 +22,12 @@ class ManifestStreamSpec extends SparkSpec {
     } finally st.close()
   }
 
+  /** The append cached its manifest as it wrote it; drop the entry so
+    * the stream reads the parquet part (the handle under test).
+    */
+  private def uncache(t: TokenTable, manifestRel: String): Unit =
+    Manifests.evict(Seq(s"${t.location}/$manifestRel"), spark.sessionState.newHadoopConf())
+
   test("filesStream: early abandon + close releases the manifest handle") {
     val dir = tmpDir("manleak")
     val t = TokenTable.create(spark, dir)
@@ -30,6 +36,7 @@ class ManifestStreamSpec extends SparkSpec {
     t.append(TokenGen.asTokenRows(TokenGen.generate(
       spark, 200, idOffset = 0, numPartitions = 2)))
     val manifestRel = t.current.manifests.head
+    uncache(t, manifestRel)
     assert(openFds(manifestRel) == 0, "no handle before the stream opens")
 
     val it = t.filesStream(t.current)
@@ -49,6 +56,7 @@ class ManifestStreamSpec extends SparkSpec {
     t.append(TokenGen.asTokenRows(TokenGen.generate(
       spark, 200, idOffset = 0, numPartitions = 2)))
     val manifestRel = t.current.manifests.head
+    uncache(t, manifestRel)
     val it = t.filesStream(t.current)
     assert(it.size == 2) // drains
     assert(openFds(manifestRel) == 0, "exhaustion closes the last part")

@@ -20,25 +20,6 @@ class SchemaEvolutionSpec extends SparkSpec {
     try f finally spark.conf.unset("spark.sql.catalog.graft")
   }
 
-  /** Catalog + extensions session — required for SQL DML (MERGE/DELETE/
-    * UPDATE route through the [[graft.plans.TokenTableResolution]] rule).
-    */
-  private def withExt[A](f: org.apache.spark.sql.SparkSession => A): A = {
-    val base = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
-      .withExtensions(new graft.GraftExtensions())
-      .getOrCreate()
-    try f(s2) finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-    }
-  }
-
   private def rows4(ids: Range, source: String = "web",
       s: org.apache.spark.sql.SparkSession = spark) = {
     import s.implicits._
@@ -140,7 +121,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("RENAME COLUMN: logical re-label over old files; DML through the new name") {
-    withExt { s2 =>
+    withExtensions { s2 =>
       val loc = tmpDir("evo_ren")
       val t = TokenTable.create(s2, loc)
       t.append(rows4(0 until 30, source = "web"))
@@ -166,7 +147,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("RENAME core doc_id: scans, metadata aggregates and MERGE keep working") {
-    withExt { s2 =>
+    withExtensions { s2 =>
       val loc = tmpDir("evo_core")
       val t = TokenTable.create(s2, loc)
       t.append(rows4(0 until 40))
@@ -241,7 +222,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("cluster + update + API merge carry an added column through rewrites") {
-    withExt { s2 =>
+    withExtensions { s2 =>
       val loc = tmpDir("evo_maint")
       val t = TokenTable.create(s2, loc)
       t.append(rows4(0 until 80))
@@ -341,7 +322,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("column comments survive to the user-visible schema; stale names reject after rename") {
-    withExt { s2 =>
+    withExtensions { s2 =>
       val loc = tmpDir("evo_cmt")
       val t = TokenTable.create(s2, loc)
       t.append(rows4(0 until 5))
