@@ -26,17 +26,12 @@ object Compact {
   case class Result(snapshot: Snapshot, binsRewritten: Int, filesIn: Int,
       filesOut: Int, bytesIn: Long, resumedTasks: Int, execId: String = "")
 
-  /** Key-local packing with an FFD fallback. Only files smaller than
-    * `smallFileFactor * targetBytes` are candidates; bins hold at most
-    * `targetBytes` and only bins with >= 2 files are worth rewriting.
-    * Deterministic: candidates sorted by (minDocId UTF-8, path).
-    */
-  def planBins(files: Seq[DataFile], targetBytes: Long,
-      smallFileFactor: Double = 0.75): Seq[Seq[DataFile]] =
-    keyLocalPack(files.filter(_.bytes < (targetBytes * smallFileFactor).toLong),
-      targetBytes)
-
-  /** STREAMING planner: one bounded-memory pass over the manifest-row
+  /** The bin planner: key-local packing ([[keyLocalPack]]) with an FFD
+    * fallback. Only files smaller than `smallFileFactor * targetBytes`
+    * are candidates; bins hold at most `targetBytes` and only bins with
+    * >= 2 files are worth rewriting.
+    *
+    * STREAMING: one bounded-memory pass over the manifest-row
     * iterator. Driver memory is O(maxCandidates), never O(#files): a
     * bounded heap keeps the SMALLEST `maxCandidates` small-file
     * candidates (smallest first is the right compaction priority — they

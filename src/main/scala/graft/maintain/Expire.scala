@@ -169,7 +169,7 @@ object Expire {
     */
   def run(table: TokenTable, retainLast: Int,
       graceMs: Long = 3600L * 1000): Result =
-    run(table, retainLast, graceMs, table.ManifestDistributeThreshold)
+    run(table, retainLast, graceMs, TokenTable.ManifestDistributeThreshold)
 
   /** [[run]] with the driver/distributed line as a parameter: past
     * `driverLimit` reachable rows or on-disk paths the orphan set is

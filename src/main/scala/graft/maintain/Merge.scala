@@ -129,9 +129,8 @@ object Merge {
     */
   val DefaultBoundsCap: Int = 1 << 17
 
-  /** Source-row cap under which the anti join's key set broadcasts
-    * (conf `graft.merge.broadcastKeyRows` overrides). Keys-only build
-    * rows are ~50 bytes framed, so the default builds a ~100MB hash
+  /** Source-row cap under which the anti join's key set broadcasts.
+    * Keys-only build rows are ~50 bytes framed, so the default builds a ~100MB hash
     * relation — comfortably inside executor memory at any deployment
     * size, far under Spark's 8GB broadcast cap, and it removes the
     * full-table exchange+sort from the rewrite (guide §3.1). Above it
@@ -345,7 +344,16 @@ object Merge {
   }
 
   def mergeInto(table: TokenTable, source: DataFrame,
-      precedenceCol: String, jobId: String): Result = {
+      precedenceCol: String, jobId: String): Result =
+    mergeInto(table, source, precedenceCol, jobId, DefaultBoundsCap, DefaultBroadcastKeyRows)
+
+  /** [[mergeInto]] with the planning caps as parameters: tests force the
+    * coarse endpoint path (a tiny `boundsCap`) and the unbroadcast anti
+    * join (`broadcastKeyRows` 0).
+    */
+  private[maintain] def mergeInto(table: TokenTable, source: DataFrame,
+      precedenceCol: String, jobId: String, boundsCap: Int,
+      broadcastKeyRows: Long): Result = {
     val parent = table.current
 
     // Align the source to the table's PHYSICAL schema first (sources
@@ -366,7 +374,7 @@ object Merge {
     // The cache is released on EVERY exit: a lost commit CAS, a failed
     // write or a source that throws while the cache builds must not
     // leave it registered in the session's cache manager.
-    try mergeCached(table, parent, src, physSchema, jobId)
+    try mergeCached(table, parent, src, physSchema, jobId, boundsCap, broadcastKeyRows)
     finally src.unpersist()
   }
 
@@ -377,19 +385,15 @@ object Merge {
     * cached relation as its own query stage.
     */
   private def mergeCached(table: TokenTable, parent: Snapshot, src: DataFrame,
-      physSchema: org.apache.spark.sql.types.StructType, jobId: String): Result = {
+      physSchema: org.apache.spark.sql.types.StructType, jobId: String,
+      boundsCap: Int, broadcastKeyRows: Long): Result = {
     val spark = table.spark
     import spark.implicits._
     val physFields = physSchema.fieldNames.toIndexedSeq
     val srcKeys = src.select($"doc_id")
 
     // Streamed planning: the driver holds the endpoint array (capped)
-    // and the TOUCHED files — never the full inventory. The cap is
-    // conf-overridable (graft.merge.boundsCap) so deployments — and the
-    // coarse-path correctness spec — can tune where exact endpoint
-    // collection hands over to distributed coarsening.
-    val boundsCap = spark.conf.getOption("graft.merge.boundsCap")
-      .map(_.toInt).getOrElse(DefaultBoundsCap)
+    // and the TOUCHED files — never the full inventory.
     val pruned = planPrune(() => table.filesStream(parent),
       srcKeys, () => table.files(parent), boundsCap)
     val srcRows = pruned.srcRows
@@ -420,9 +424,7 @@ object Merge {
     // pick this itself, as the cached source's size estimate exceeds
     // autoBroadcastJoinThreshold long before the key projection does.
     // Above the cap adaptive execution picks the join.
-    val bcKeyRowsCap = spark.conf.getOption("graft.merge.broadcastKeyRows")
-      .map(_.toLong).getOrElse(DefaultBroadcastKeyRows)
-    val keys = if (srcRows <= bcKeyRowsCap) broadcast(srcKeys) else srcKeys
+    val keys = if (srcRows <= broadcastKeyRows) broadcast(srcKeys) else srcKeys
     val merged = target.join(keys, Seq("doc_id"), "left_anti")
       .select(physFields.map(col): _*)
       .unionByName(src.select(physFields.map(col): _*))
@@ -444,16 +446,9 @@ object Merge {
     val sampleKeys: Array[String] =
       if (plan.decode.isEmpty || (nOut <= 1 && prune.extLo.length <= 1))
         Array.empty
-      else target.select($"doc_id")
-        .sample(withReplacement = false,
-          math.min(1.0, 200000.0 / math.max(1L, touchedRows)), seed = 42L)
+      else Cluster.sampleOf(target.select($"doc_id"), touchedRows)
         .as[String].collect().sorted(Search.utf8Ordering)
-    val rangeBounds: Array[String] =
-      if (sampleKeys.isEmpty) Array.empty
-      else (1 until nOut)
-        .map(i => sampleKeys(
-          (i.toLong * sampleKeys.length / nOut).toInt.min(sampleKeys.length - 1)))
-        .distinct.toArray
+    val rangeBounds = Cluster.quantileBounds(sampleKeys, nOut)
     // Target keys the gap rule counts: the decoded sample, plus the file
     // endpoints and the cold copies' endpoints — real keys the sample
     // cannot see (untouched, fully cold and row-group-copied rows).

@@ -59,13 +59,10 @@ class TokenTable(val location: String, val spark: SparkSession) {
   def filesStream(s: Snapshot): Manifests.CloseableIterator[DataFile] =
     Manifests.stream(location, s.manifests, spark.sessionState.newHadoopConf())
 
-  /** Row count above which survivor-manifest writes run distributed. */
-  val ManifestDistributeThreshold: Long = 65536L
-
   /** Write the manifest for a rewrite commit: the parent's files minus
     * `removedPaths`, plus `extra`. Driver memory is bounded by
     * max(|removedPaths|, |extra|, threshold): small inventories stream
-    * driver-side; above [[ManifestDistributeThreshold]] the survivor
+    * driver-side; above [[TokenTable.ManifestDistributeThreshold]] the survivor
     * filter runs as a distributed anti-join and the manifest is written
     * by executors — the driver never holds the survivor list.
     */
@@ -77,11 +74,11 @@ class TokenTable(val location: String, val spark: SparkSession) {
     var n = 0L
     val survivors = Seq.newBuilder[DataFile]
     val it = filesStream(parent)
-    while (n <= ManifestDistributeThreshold && it.hasNext) {
+    while (n <= TokenTable.ManifestDistributeThreshold && it.hasNext) {
       val f = it.next(); n += 1
       if (!removedPaths.contains(f.path)) survivors += f
     }
-    if (n <= ManifestDistributeThreshold) writeManifest(survivors.result() ++ extra)
+    if (n <= TokenTable.ManifestDistributeThreshold) writeManifest(survivors.result() ++ extra)
     else {
       it.close()
       import spark.implicits._
@@ -253,14 +250,6 @@ class TokenTable(val location: String, val spark: SparkSession) {
     statsFor(relDir)
   }
 
-  /** Files-per-commit threshold above which stats collection runs as a
-    * Spark job instead of the driver pool. Below it, job-scheduling
-    * latency dominates the work; above it, driver-side IO becomes the
-    * bottleneck (a 10^6-file commit must not funnel through 16 driver
-    * threads).
-    */
-  val StatsDistributeThreshold = 256
-
   /** Manifest rows (with stats) for every parquet file under a
     * table-relative data directory.
     *
@@ -272,7 +261,7 @@ class TokenTable(val location: String, val spark: SparkSession) {
     * the same stream. No Spark job is scheduled for ordinary commits —
     * the old per-commit sum(n_tok) aggregation job cost a fixed ~0.3 s
     * of scheduling, a serial floor that capped ingest's N->4N scaling —
-    * while file sets above [[StatsDistributeThreshold]] run the same
+    * while file sets above [[TokenTable.StatsDistributeThreshold]] run the same
     * per-file routine distributed via `mapPartitions` over the path
     * list.
     */
@@ -283,7 +272,7 @@ class TokenTable(val location: String, val spark: SparkSession) {
     if (paths.isEmpty) return Nil
     val root = new org.apache.hadoop.fs.Path(location).toUri.getPath
 
-    if (paths.size <= StatsDistributeThreshold) {
+    if (paths.size <= TokenTable.StatsDistributeThreshold) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(16, paths.size))
       implicit val ec: scala.concurrent.ExecutionContext =
@@ -515,6 +504,17 @@ object TokenTable {
     * cached and streams off disk on every read.
     */
   val ManifestCacheBytes: Long = 64L * 1024 * 1024
+
+  /** Row count above which survivor-manifest writes run distributed. */
+  val ManifestDistributeThreshold: Long = 65536L
+
+  /** Files-per-commit threshold above which stats collection runs as a
+    * Spark job instead of the driver pool. Below it, job-scheduling
+    * latency dominates the work; above it, driver-side IO becomes the
+    * bottleneck (a 10^6-file commit must not funnel through 16 driver
+    * threads).
+    */
+  val StatsDistributeThreshold = 256
 
   /** [[tokenSchema]] with every field (and array element) nullable —
     * the CANONICAL parquet repetition layout of engine-written files

@@ -30,7 +30,7 @@ class PropertySpec extends AnyFunSuite {
     } yield (target, sizes)
     check("planBins", Prop.forAll(gen) { case (target, sizes) =>
       val files = sizes.zipWithIndex.map { case (b, i) => file(f"f$i%03d", b) }
-      val bins = Compact.planBins(files, target)
+      val bins = Compact.planBinsStreaming(files.iterator, target)._1
       val threshold = (target * 0.75).toLong
       val packed = bins.flatten.map(_.path)
       val candidates = files.filter(_.bytes < threshold)
@@ -46,7 +46,7 @@ class PropertySpec extends AnyFunSuite {
         (candidates.size < 2 ||
           candidates.map(_.bytes).sorted.take(2).sum > target ||
           bins.nonEmpty) &&
-        Compact.planBins(files, target) == bins // deterministic
+        Compact.planBinsStreaming(files.iterator, target)._1 == bins // deterministic
     })
   }
 

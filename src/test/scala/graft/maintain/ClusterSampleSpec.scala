@@ -5,8 +5,8 @@ import graft.ingest.TokenGen
 import graft.table.{DataFile, TokenTable}
 
 /** Bounded boundary-sample IO (round-6 optimization): clustering's
-  * planning sample must read at most `graft.cluster.sampleFiles` files,
-  * not the whole table.
+  * planning sample must read at most `Cluster.SampleFileCap` files
+  * (a test-sized cap here), not the whole table.
   */
 class ClusterSampleSpec extends SparkSpec {
 
@@ -40,12 +40,16 @@ class ClusterSampleSpec extends SparkSpec {
         spark, 500, idOffset = i * 500L, numPartitions = 2)))
     }
     val before = checksum(t.scan())
-    spark.conf.set("graft.cluster.sampleFiles", "3")
-    try {
-      Cluster.run(t, Cluster.ZOrder, "cs-z", targetBytes = 256L * 1024)
-      assert(checksum(t.scan()) == before)
-      Cluster.runByDocId(t, "cs-d", targetBytes = 256L * 1024)
-      assert(checksum(t.scan()) == before)
-    } finally spark.conf.unset("graft.cluster.sampleFiles")
+    val sc = spark.sparkContext
+    val group = s"csample-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "capped z-order")
+    try Cluster.run(t, Cluster.ZOrder, "cs-z", 256L * 1024, incremental = true, sampleCap = 3)
+    finally sc.clearJobGroup()
+    assert(checksum(t.scan()) == before)
+    // One sample job before the exchange, capped or not (see ClusterJobsSpec).
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs <= 3, s"$jobs jobs for one capped Z-order pass")
+    Cluster.run(t, Cluster.ByDocId, "cs-d", 256L * 1024, incremental = true, sampleCap = 3)
+    assert(checksum(t.scan()) == before)
   }
 }

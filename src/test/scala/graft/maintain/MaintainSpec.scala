@@ -73,7 +73,7 @@ class MaintainSpec extends SparkSpec {
     val t = smallFileTable()
     val files = t.filesLocal(t.current)
     val target = 4L * 1024 * 1024
-    val bins = Compact.planBins(files, target)
+    val bins = Compact.planBinsStreaming(files.iterator, target)._1
     bins.foreach { b =>
       assert(b.map(_.bytes).sum <= target)
       assert(b.size >= 2)
@@ -89,7 +89,7 @@ class MaintainSpec extends SparkSpec {
     // Six range-adjacent 30KB fragments, 64KB target: bins must pair
     // NEIGHBOURS (tight output ranges), never key-distant fragments.
     val frags = (0 until 6).map(i => f(s"f$i", f"d${i}%02d0", f"d${i}%02d9", 30000L))
-    val bins = Compact.planBins(frags, 64000L)
+    val bins = Compact.planBinsStreaming(frags.iterator, 64000L)._1
     assert(bins.nonEmpty && bins.forall(_.size == 2))
     bins.foreach { b =>
       val idx = b.map(frags.indexOf).sorted
@@ -99,7 +99,7 @@ class MaintainSpec extends SparkSpec {
     // still packs the two smalls instead of dropping all work.
     val alt = Seq(f("a", "d00", "d09", 45000L), f("b", "d10", "d19", 30000L),
       f("c", "d20", "d29", 45000L), f("d", "d30", "d39", 30000L))
-    val bins2 = Compact.planBins(alt, 64000L)
+    val bins2 = Compact.planBinsStreaming(alt.iterator, 64000L)._1
     assert(bins2.flatten.map(_.path).toSet == Set("b", "d"))
   }
 
@@ -112,7 +112,7 @@ class MaintainSpec extends SparkSpec {
     val parent = t.current
     val execId = s"$jobId-v${parent.version}"
     val binBytes = 128L * 1024
-    val bins = Compact.planBins(t.filesLocal(parent), binBytes)
+    val bins = Compact.planBinsStreaming(t.filesStream(parent), binBytes)._1
     assert(bins.size >= 2, "need >=2 bins for a meaningful resume test")
     val plan = Lineage.planOrResume(t, Lineage.JobPlan(execId, "compact",
       parent.version, bins.zipWithIndex.map { case (b, i) => i.toString -> b.map(_.path) }.toMap))

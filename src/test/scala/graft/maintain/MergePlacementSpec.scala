@@ -84,23 +84,22 @@ class MergePlacementSpec extends SparkSpec {
       .select($"doc_id", array_repeat(lit(tokens), 3).as("tokens"),
         lit(3).as("n_tok"), $"source")
       .withColumn("__p", monotonically_increasing_id())
-    def twoMerges(t: TokenTable, job: String): Merge.Result = {
-      Merge.mergeInto(t, updates(t, 5), "__p", s"$job-1")
-      Merge.mergeInto(t, updates(t, 6), "__p", s"$job-2")
+    def twoMerges(t: TokenTable, job: String,
+        broadcastKeyRows: Long = Merge.DefaultBroadcastKeyRows): Merge.Result = {
+      def merge(tokens: Int, n: Int) = Merge.mergeInto(t, updates(t, tokens), "__p",
+        s"$job-$n", Merge.DefaultBoundsCap, broadcastKeyRows)
+      merge(5, 1)
+      merge(6, 2)
     }
 
     val (_, dflt) = build("mu_default")
     val dfltRepeat = twoMerges(dflt, "mu-d")
 
     val (forcedDir, forced) = build("mu_forced")
-    spark.conf.set("graft.merge.broadcastKeyRows", "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val forcedRepeat =
-      try twoMerges(forced, "mu-f")
-      finally {
-        spark.conf.unset("graft.merge.broadcastKeyRows")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
+      try twoMerges(forced, "mu-f", broadcastKeyRows = 0L)
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     assert(checksum(forced.scan()) == checksum(dflt.scan()),
       "the unbounded path must commit the same rows")

@@ -126,9 +126,8 @@ class RowGroupMergeSpec extends SparkSpec {
       .select($"doc_id", array_repeat(lit(5), 2).as("tokens"),
         lit(2).as("n_tok"), $"source")
       .withColumn("__p", monotonically_increasing_id())
-    spark.conf.set("graft.merge.boundsCap", "4")
-    val r = try Merge.mergeInto(t, updates, "__p", "cm-m1")
-      finally spark.conf.unset("graft.merge.boundsCap")
+    val r = Merge.mergeInto(t, updates, "__p", "cm-m1", boundsCap = 4,
+      broadcastKeyRows = Merge.DefaultBroadcastKeyRows)
     assert(r.sourceRows == 100)
     assert(t.scan().count() == 8000)
     val in = t.scan()

@@ -155,7 +155,7 @@ class TableSpec extends SparkSpec {
     val t = TokenTable.create(spark, loc)
     // One commit with more output files than StatsDistributeThreshold so
     // statsFor runs as a mapPartitions Spark job over the path list.
-    val nParts = t.StatsDistributeThreshold + 16
+    val nParts = TokenTable.StatsDistributeThreshold + 16
     val rows = TokenGen.asTokenRows(TokenGen.generate(
       spark, 2000, idOffset = 0, minLen = 16, maxLen = 32, numPartitions = 4))
       .repartition(nParts)
@@ -164,7 +164,7 @@ class TableSpec extends SparkSpec {
     // Some partitions may be empty (2000 rows over 272 partitions are
     // hash-spread, so near-all get rows); every non-empty one must be
     // statted, and totals must match the data exactly.
-    assert(files.size > t.StatsDistributeThreshold / 2)
+    assert(files.size > TokenTable.StatsDistributeThreshold / 2)
     val expect = rows.agg(
       count(lit(1)), sum(col("n_tok").cast("long")),
       min(col("doc_id")), max(col("doc_id"))).head()
