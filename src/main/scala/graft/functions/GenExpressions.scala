@@ -100,6 +100,9 @@ case class WidenNullable(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = widen(child.dataType)
   override def nullable: Boolean = true
+  // Never folded: ConstantFolding would replace it over a literal child
+  // with a non-null literal, and the write would be `required` again.
+  override def foldable: Boolean = false
   override lazy val deterministic: Boolean = child.deterministic
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =

@@ -26,6 +26,11 @@ object Compact {
   case class Result(snapshot: Snapshot, binsRewritten: Int, filesIn: Int,
       filesOut: Int, bytesIn: Long, resumedTasks: Int, execId: String = "")
 
+  /** Average input row-group size below which a bin re-encodes instead
+    * of concatenating: groups that small are worth consolidating.
+    */
+  val ReencodeBelowBytes: Long = 1L * 1024 * 1024
+
   /** The bin planner: key-local packing ([[keyLocalPack]]) with an FFD
     * fallback. Only files smaller than `smallFileFactor * targetBytes`
     * are candidates; bins hold at most `targetBytes` and only bins with
@@ -179,7 +184,16 @@ object Compact {
     */
   def run(table: TokenTable, targetBytes: Long, jobId: String,
       parallelism: Int = 8, beforeCommit: () => Unit = () => (),
-      rechunk: Boolean = false): Result = {
+      rechunk: Boolean = false): Result =
+    run(table, targetBytes, jobId, parallelism, beforeCommit, rechunk,
+      ReencodeBelowBytes)
+
+  /** [[run]] with the concat/re-encode threshold as a parameter (tests
+    * force the concat path on KB-sized files with 0).
+    */
+  private[graft] def run(table: TokenTable, targetBytes: Long, jobId: String,
+      parallelism: Int, beforeCommit: () => Unit, rechunk: Boolean,
+      reencodeBelowBytes: Long): Result = {
     val spark = table.spark
     val parent = table.current
     // Scope the execution to the snapshot it plans against: a re-run
@@ -230,9 +244,7 @@ object Compact {
     // entirely. Pathologically fragmented bins (avg input below this
     // threshold — their row groups are at most that small) re-encode
     // through the decode path to consolidate groups; so does any bin
-    // with a foreign schema. The threshold is conf-overridable.
-    val reencodeBelow = spark.conf.getOption("graft.compact.reencodeBelowBytes")
-      .map(_.toLong).getOrElse(1L * 1024 * 1024)
+    // with a foreign schema.
     // Memory-aware concurrency clamp: one bin task transiently holds the
     // decompressed bin plus parquet writer buffers (~3x the compressed
     // bin). Aggregate that across concurrent bins and a fixed-size heap
@@ -278,9 +290,9 @@ object Compact {
             val avgGroupBytes = binFiles.map(_.bytes).sum /
               math.max(1L, binFiles.map(f => math.max(1, f.groups).toLong).sum)
             val out: Seq[DataFile] =
-              if (!rechunk && avgGroupBytes >= reencodeBelow) {
+              if (!rechunk && avgGroupBytes >= reencodeBelowBytes) {
                 // Clear any partial decode output from a crashed attempt
-                // under a different threshold conf, then pure-IO concat
+                // under a different threshold, then pure-IO concat
                 // (no Spark job at all — the task is one streamed copy).
                 val dir = new org.apache.hadoop.fs.Path(
                   s"${table.location}/data/$execId/bin-$taskId")

@@ -1,9 +1,10 @@
 package graft.maintain
 
 import graft.lineage.Lineage
-import graft.table.{DataFile, ManifestFileIndex, Snapshot, TokenTable}
+import graft.table.{DataFile, ManifestFileIndex, RowGroupCopy, Snapshot, TokenTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The copy-on-write tail every row-level rewrite (MERGE, DELETE,
   * UPDATE) ends with: write the decoded slice, record lineage, write the
@@ -22,7 +23,7 @@ object Rewrite {
     * through [[TokenTable.read]].
     */
   private[maintain] case class ColdPlan(
-      splits: Seq[graft.table.RowGroupCopy.Split],
+      splits: Seq[RowGroupCopy.Split],
       fullyCold: Seq[DataFile],
       coldFiles: Seq[DataFile],
       decode: Seq[DataFile]) {
@@ -46,24 +47,26 @@ object Rewrite {
       parent: Snapshot, cond: Expression, touched: Seq[DataFile]): ColdPlan =
     fromSplits(
       if (touched.nonEmpty && ManifestFileIndex.canPrune(cond))
-        graft.table.RowGroupCopy.planAllByPredicate(table.spark, table.location,
-          touched.map(_.path), coldDir(jobId, parent), hotxDir(jobId, parent), cond)
+        RowGroupCopy.planAll(table.spark, table.location, touched.map(_.path),
+          coldDir(jobId, parent), hotxDir(jobId, parent))(ManifestFileIndex.mightMatch(cond, _))
       else Nil,
       touched)
 
   /** Plan the cold copy by source-key extents (sorted, disjoint, as
     * [[Merge.Prune]] holds them): row groups whose doc_id bounds
-    * intersect no extent hold no key.
+    * intersect no extent ([[Merge.intersectsExtents]]) hold no key.
     */
   private[maintain] def byExtents(table: TokenTable, jobId: String,
       parent: Snapshot, extLo: Array[String], extHi: Array[String],
       touched: Seq[DataFile]): ColdPlan =
     fromSplits(
-      if (touched.nonEmpty && extLo.nonEmpty)
-        graft.table.RowGroupCopy.planAll(table.spark, table.location,
-          touched.map(_.path), coldDir(jobId, parent), hotxDir(jobId, parent),
-          extLo, extHi)
-      else Nil,
+      if (touched.nonEmpty && extLo.nonEmpty) {
+        val lo = extLo.map(UTF8String.fromString)
+        val hi = extHi.map(UTF8String.fromString)
+        RowGroupCopy.planAll(table.spark, table.location, touched.map(_.path),
+          coldDir(jobId, parent), hotxDir(jobId, parent))(g =>
+          Merge.intersectsExtents(g.minDocId, g.maxDocId, lo, hi))
+      } else Nil,
       touched)
 
   /** The degenerate plan: decode every touched file. */
@@ -77,7 +80,7 @@ object Rewrite {
     * the index's pruning stays sound, while `rows` and `groups` describe
     * the origin — only the index reads these rows, never a manifest.
     */
-  private def fromSplits(splits: Seq[graft.table.RowGroupCopy.Split],
+  private def fromSplits(splits: Seq[RowGroupCopy.Split],
       touched: Seq[DataFile]): ColdPlan = {
     val byPath = touched.map(f => f.path -> f).toMap
     if (splits.nonEmpty)

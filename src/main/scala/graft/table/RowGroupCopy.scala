@@ -1,44 +1,43 @@
 package graft.table
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
-/** Row-group-level hot/cold split for MERGE rewrites.
+/** Row-group-level copies: the hot/cold split of a row-level rewrite
+  * (MERGE, DELETE, UPDATE) and compaction's concatenation, both through
+  * one bytewise row-group copier.
   *
-  * A merge's file-level prune ([[graft.maintain.Merge.planPrune]])
-  * marks whole files as touched, but a touched file's ROW GROUPS carry
-  * their own doc_id min/max in the parquet footer — usually much tighter
-  * than the file's. A row group whose [min,max] intersects no source-key
-  * extent provably contains no row equal to any source key, so
-  * its bytes can carry into the new snapshot VERBATIM
-  * (`ParquetFileWriter.appendRowGroups` — a positioned byte copy of the
-  * column chunks, zero decode, zero re-encode). Only the hot row groups
-  * go through the decode → anti-join → re-encode rewrite.
+  * A rewrite's file-level classification marks whole files as touched,
+  * but a touched file's ROW GROUPS carry their own footer min/max —
+  * usually much tighter than the file's. A row group the caller's test
+  * proves cold (no row can match) carries into the new snapshot
+  * VERBATIM (`ParquetFileWriter.appendRowGroups` — a positioned byte
+  * copy of the column chunks, zero decode, zero re-encode). Only the hot
+  * row groups go through the decode → filter → re-encode rewrite.
   *
-  * At 100 TB this is the difference between a merge whose cost tracks
-  * the UPDATE footprint and one that re-encodes every file an update
-  * grazes: a 512 MB file with 32 row groups and one updated key range
+  * At 100 TB this is the difference between a rewrite whose cost tracks
+  * the predicate's footprint and one that re-encodes every file it
+  * grazes: a 512 MB file with 32 row groups and one hit key range
   * copies ~31/32 of its bytes at IO speed and decodes ~1/32.
   *
   * Classification reads footers only (no data pages); the copy streams
-  * column chunks. Both run per-file, embarrassingly parallel: a driver
-  * pool below [[TokenTable.StatsDistributeThreshold]] files, a
-  * `mapPartitions` job above it (same dispatch rationale as
-  * [[TokenTable.statsFor]]).
+  * column chunks. Both run per file on [[FileStats.perFile]]'s fan-out,
+  * the same one manifest stats collection uses.
   */
 object RowGroupCopy {
 
   /** One touched file's outcome.
     *
     * @param origPath   table-relative original path
-    * @param allCold    no row group intersects a source-key extent — the
-    *                   original file survives UNTOUCHED (file-level
-    *                   pruning was over-approximate; zero IO here)
+    * @param allCold    no row group is hot — the original file survives
+    *                   UNTOUCHED (file-level classification was
+    *                   over-approximate; zero IO here)
     * @param decodeRel  what the rewrite must DECODE: the original path
     *                   when every group is hot (no copy made), else the
     *                   hot-extract file containing only hot groups
@@ -46,7 +45,7 @@ object RowGroupCopy {
     * @param coldFiles  manifest rows of the bytewise-copied cold groups —
     *                   one output file per contiguous cold RUN, so no
     *                   cold file's [min,max] straddles a hot range and a
-    *                   repeat merge over the same keys prunes them all
+    *                   repeat rewrite over the same keys prunes them all
     *                   at file level (one combined file would span the
     *                   hot holes and be re-touched forever)
     */
@@ -57,102 +56,28 @@ object RowGroupCopy {
       decodeBytes: Long,
       coldFiles: Seq[DataFile])
 
-  /** Is a row group with doc_id bounds [lo,hi] possibly hot? The TIGHT
-    * test: does [lo,hi] intersect any source-key extent
-    * ([[graft.maintain.Merge.intersectsExtents]])? Missing stats ⇒ hot
-    * (conservative: a false "hot" decodes extra bytes; a false "cold"
-    * would lose an update).
+  /** Split every touched file by row group. `hot` sees each group's
+    * manifest-row view ([[FileStats.groupStats]]) and must answer true
+    * whenever a row of the group might be rewritten (a false "hot"
+    * decodes extra bytes; a false "cold" would lose a change). Cold runs
+    * copy into `coldDirRel`, hot groups into `hotxDirRel` (both
+    * table-relative), under names derived from the original path:
+    * OVERWRITE semantics keep a crash-rerun at the same version
+    * idempotent. `hot` ships into the distributed branch's closure.
     */
-  private def blockHot(lo: String, hi: String,
-      extLo: Array[UTF8String], extHi: Array[UTF8String]): Boolean =
-    graft.maintain.Merge.intersectsExtents(lo, hi, extLo, extHi)
-
-  private def colStrBounds(b: BlockMetaData, name: String): (String, String) = {
-    var lo: String = null; var hi: String = null
-    b.getColumns.forEach { c =>
-      if (c.getPath.toDotString == name) {
-        val st = c.getStatistics
-        if (st != null && st.hasNonNullValue) {
-          lo = st.genericGetMin match {
-            case bin: org.apache.parquet.io.api.Binary => bin.toStringUsingUTF8
-            case x => String.valueOf(x)
-          }
-          hi = st.genericGetMax match {
-            case bin: org.apache.parquet.io.api.Binary => bin.toStringUsingUTF8
-            case x => String.valueOf(x)
-          }
-        }
-      }
+  def planAll(spark: SparkSession, location: String, relPaths: Seq[String],
+      coldDirRel: String, hotxDirRel: String)(hot: DataFile => Boolean): Seq[Split] = {
+    import spark.implicits._
+    val rootUriPath = new Path(location).toUri.getPath
+    FileStats.perFile(spark, spark.sessionState.newHadoopConf(), relPaths) { (p, c) =>
+      Some(split(p, location, rootUriPath, coldDirRel, hotxDirRel, c, hot))
     }
-    (lo, hi)
   }
 
-  private def docIdBounds(b: BlockMetaData): (String, String) =
-    colStrBounds(b, "doc_id")
-
-  /** Manifest-row VIEW of one row group's footer stats (doc_id / source
-    * min-max, n_tok min-max with the no-stats sentinel), so group-level
-    * hot/cold classification reuses the SAME decision procedure the
-    * file-level prune uses — [[ManifestFileIndex.mightMatch]] — for the
-    * FULL predicate, not just its doc_id terms (VERDICT r4 task 5: a
-    * `source = 'bad-crawl'` boundary file used to decode whole even
-    * though its footers carry source bounds). Missing column stats
-    * degrade to the conservative "might match" exactly as at file level.
-    */
-  private[table] def blockStats(b: BlockMetaData): DataFile = {
-    val (dlo, dhi) = colStrBounds(b, "doc_id")
-    val (slo, shi) = colStrBounds(b, "source")
-    var nlo = Int.MaxValue; var nhi = Int.MinValue // sentinel = no stats
-    b.getColumns.forEach { c =>
-      if (c.getPath.toDotString == "n_tok") {
-        val st = c.getStatistics
-        if (st != null && st.hasNonNullValue) {
-          nlo = st.genericGetMin.asInstanceOf[Number].intValue
-          nhi = st.genericGetMax.asInstanceOf[Number].intValue
-        }
-      }
-    }
-    DataFile(path = "", bytes = b.getCompressedSize, rows = b.getRowCount,
-      minDocId = dlo, maxDocId = dhi, minNtok = nlo, maxNtok = nhi,
-      sumNtok = 0L, minSource = slo, maxSource = shi, groups = 1)
-  }
-
-  /** Classify one file's row groups against the source-key EXTENTS
-    * (MERGE's shape) and split. See [[splitByFlags]].
-    */
-  def splitFile(relPath: String, location: String, rootUriPath: String,
-      coldDirRel: String, hotxDirRel: String,
-      extLo: Array[String], extHi: Array[String],
-      conf: Configuration): Split = {
-    val loU8 = extLo.map(UTF8String.fromString)
-    val hiU8 = extHi.map(UTF8String.fromString)
-    splitByFlags(relPath, location, rootUriPath, coldDirRel, hotxDirRel,
-      conf, b => { val (lo, hi) = docIdBounds(b); blockHot(lo, hi, loU8, hiU8) })
-  }
-
-  /** Classify one file's row groups against a full DML PREDICATE
-    * (DELETE/UPDATE's shape): a group is cold iff its footer stats
-    * PROVE no row can satisfy the predicate — the same `mightMatch`
-    * the scan planner prunes files with, applied per group.
-    */
-  def splitFileByPredicate(relPath: String, location: String,
+  private def split(relPath: String, location: String,
       rootUriPath: String, coldDirRel: String, hotxDirRel: String,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      conf: Configuration): Split =
-    splitByFlags(relPath, location, rootUriPath, coldDirRel, hotxDirRel,
-      conf, b => ManifestFileIndex.mightMatch(cond, blockStats(b)))
-
-  /** Classify one file's row groups with `isHot` and bytewise-copy each
-    * class into `coldDirRel` / `hotxDirRel` (both table-relative).
-    * OVERWRITE semantics on the outputs (deterministic names derived
-    * from the original path) keep a crash-rerun at the same version
-    * idempotent.
-    */
-  private def splitByFlags(relPath: String, location: String,
-      rootUriPath: String, coldDirRel: String, hotxDirRel: String,
-      conf: Configuration, isHot: BlockMetaData => Boolean): Split = {
-    val inPath = new org.apache.hadoop.fs.Path(s"$location/$relPath")
-    val inputFile = HadoopInputFile.fromPath(inPath, conf)
+      conf: Configuration, hot: DataFile => Boolean): Split = {
+    val inputFile = HadoopInputFile.fromPath(new Path(s"$location/$relPath"), conf)
     val reader = ParquetFileReader.open(inputFile)
     val (schema, kv, blocks) =
       try {
@@ -160,12 +85,12 @@ object RowGroupCopy {
         (md.getSchema, md.getKeyValueMetaData, reader.getFooter.getBlocks.asScala.toSeq)
       } finally reader.close()
 
-    val flags: Seq[Boolean] = blocks.map(isHot)
+    val flags: Seq[Boolean] = blocks.map(b => hot(FileStats.groupStats(b)))
     if (!flags.contains(true))
       return Split(relPath, allCold = true, None, 0L, Nil)
     if (!flags.contains(false))
       return Split(relPath, allCold = false, Some(relPath), inputFile.getLength, Nil)
-    val hot = blocks.zip(flags).collect { case (b, true) => b }
+    val hotGroups = blocks.zip(flags).collect { case (b, true) => b }
     // Contiguous cold runs, in file order.
     val coldRuns = scala.collection.mutable.ArrayBuffer.empty[Seq[BlockMetaData]]
     var run = scala.collection.mutable.ArrayBuffer.empty[BlockMetaData]
@@ -178,26 +103,17 @@ object RowGroupCopy {
     // Deterministic output names: <sha1(relPath)>.parquet under each dir.
     val stem = java.security.MessageDigest.getInstance("SHA-1")
       .digest(relPath.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(20)
-    def copyGroups(groups: Seq[BlockMetaData], outRel: String): org.apache.hadoop.fs.Path = {
-      val out = new org.apache.hadoop.fs.Path(s"$location/$outRel")
-      val w = new ParquetFileWriter(
-        HadoopOutputFile.fromPath(out, conf), schema,
-        ParquetFileWriter.Mode.OVERWRITE,
-        128L * 1024 * 1024, /* maxPaddingSize = */ 0)
-      w.start()
-      val in = inputFile.newStream()
-      try w.appendRowGroups(in, groups.asJava, false)
-      finally in.close()
-      w.end(kv)
+    def copy(groups: Seq[BlockMetaData], outRel: String): Path = {
+      val out = new Path(s"$location/$outRel")
+      copyRowGroups(out, schema, kv, Seq(inputFile -> groups), conf)
       out
     }
     val hotxRel = s"$hotxDirRel/hotx-$stem.parquet"
-    val hotxPath = copyGroups(hot, hotxRel)
+    val hotxPath = copy(hotGroups, hotxRel)
     // Manifest stats for each cold survivor: footer min/max + n_tok page
     // drain, one open of each (just-written) cold file.
     val coldStats = coldRuns.zipWithIndex.flatMap { case (groups, k) =>
-      val rel = s"$coldDirRel/cold-$stem-r$k.parquet"
-      val p = copyGroups(groups, rel)
+      val p = copy(groups, s"$coldDirRel/cold-$stem-r$k.parquet")
       FileStats.statsForFile(p.toUri.getPath, rootUriPath, conf)
     }.toSeq
     val hotxLen = hotxPath.getFileSystem(conf).getFileStatus(hotxPath).getLen
@@ -229,10 +145,9 @@ object RowGroupCopy {
   def concatFiles(inputs: Seq[DataFile], location: String, outRel: String,
       conf: Configuration): DataFile = {
     require(inputs.nonEmpty, "empty concat bin")
-    val outPath = new org.apache.hadoop.fs.Path(s"$location/$outRel")
+    val outPath = new Path(s"$location/$outRel")
     val footers = inputs.map { f =>
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$location/${f.path}"), conf)
+      val in = HadoopInputFile.fromPath(new Path(s"$location/${f.path}"), conf)
       val r = ParquetFileReader.open(in)
       try (in, r.getFooter.getFileMetaData, r.getFooter.getBlocks.asScala.toSeq)
       finally r.close()
@@ -242,16 +157,8 @@ object RowGroupCopy {
       throw new SchemaMismatch(
         s"concat schema mismatch: ${in.getPath} has ${md.getSchema}, expected $schema")
     }
-    val w = new ParquetFileWriter(
-      HadoopOutputFile.fromPath(outPath, conf), schema,
-      ParquetFileWriter.Mode.OVERWRITE, 128L * 1024 * 1024, 0)
-    w.start()
-    footers.foreach { case (in, _, blocks) =>
-      val s = in.newStream()
-      try w.appendRowGroups(s, blocks.asJava, false)
-      finally s.close()
-    }
-    w.end(footers.head._2.getKeyValueMetaData)
+    copyRowGroups(outPath, schema, footers.head._2.getKeyValueMetaData,
+      footers.map { case (in, _, blocks) => in -> blocks }, conf)
     val bytes = outPath.getFileSystem(conf).getFileStatus(outPath).getLen
 
     val ord = graft.functions.Search.utf8Ordering
@@ -275,72 +182,30 @@ object RowGroupCopy {
         // concat read every footer anyway.
         groups = footers.map(_._3.size).sum)
     else {
-      val root = new org.apache.hadoop.fs.Path(location).toUri.getPath
+      val root = new Path(location).toUri.getPath
       FileStats.statsForFile(outPath.toUri.getPath, root, conf)
         .getOrElse(sys.error(s"statsForFile found no file at $outPath"))
     }
   }
 
-  /** Split every touched file against source-key extents (MERGE /
-    * deleteByDocIds). Dispatch mirrors [[TokenTable.statsFor]]: small
-    * sets on a driver pool (no job-scheduling floor per merge), big
-    * sets as a Spark job over the path list.
+  /** The one row-group copier: write `out` (OVERWRITE) holding, in
+    * order, the given row groups of each input file, each copied as a
+    * positioned byte range of its column chunks.
     */
-  def planAll(spark: SparkSession, location: String, relPaths: Seq[String],
-      coldDirRel: String, hotxDirRel: String,
-      extLo: Array[String], extHi: Array[String]): Seq[Split] =
-    dispatch(spark, location, relPaths) { (p, rootUriPath, c) =>
-      splitFile(p, location, rootUriPath, coldDirRel, hotxDirRel,
-        extLo, extHi, c)
+  private def copyRowGroups(out: Path, schema: MessageType,
+      kv: java.util.Map[String, String],
+      inputs: Seq[(HadoopInputFile, Seq[BlockMetaData])],
+      conf: Configuration): Unit = {
+    val w = new ParquetFileWriter(
+      HadoopOutputFile.fromPath(out, conf), schema,
+      ParquetFileWriter.Mode.OVERWRITE,
+      128L * 1024 * 1024, /* maxPaddingSize = */ 0)
+    w.start()
+    inputs.foreach { case (in, groups) =>
+      val s = in.newStream()
+      try w.appendRowGroups(s, groups.asJava, false)
+      finally s.close()
     }
-
-  /** Split every touched file against a full DML predicate (DELETE /
-    * UPDATE). The Catalyst expression ships into the distributed path's
-    * closure — expressions are serializable trees.
-    */
-  def planAllByPredicate(spark: SparkSession, location: String,
-      relPaths: Seq[String], coldDirRel: String, hotxDirRel: String,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[Split] =
-    dispatch(spark, location, relPaths) { (p, rootUriPath, c) =>
-      splitFileByPredicate(p, location, rootUriPath, coldDirRel,
-        hotxDirRel, cond, c)
-    }
-
-  private def dispatch(spark: SparkSession, location: String,
-      relPaths: Seq[String])(
-      split: (String, String, Configuration) => Split): Seq[Split] = {
-    if (relPaths.isEmpty) return Nil
-    val conf = spark.sessionState.newHadoopConf()
-    val rootUriPath = new org.apache.hadoop.fs.Path(location).toUri.getPath
-    if (relPaths.size <= 256) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, relPaths.size))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val fs = relPaths.map { p =>
-        scala.concurrent.Future(split(p, rootUriPath, conf))
-      }
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    } else {
-      val confEntries: Seq[(String, String)] = {
-        val b = Seq.newBuilder[(String, String)]
-        conf.iterator().forEachRemaining(e => b += (e.getKey -> e.getValue))
-        b.result()
-      }
-      import spark.implicits._
-      val slices = math.min(relPaths.size,
-        math.max(1, spark.sparkContext.defaultParallelism))
-      spark.createDataset(relPaths)
-        .repartition(slices)
-        .mapPartitions { it =>
-          val c = new Configuration(false)
-          confEntries.foreach { case (k, v) => c.set(k, v) }
-          it.map(p => split(p, rootUriPath, c))
-        }
-        .collect().toSeq
-    }
+    w.end(kv)
   }
 }

@@ -183,9 +183,9 @@ class TokenTable(val location: String, val spark: SparkSession) {
   // ---------------------------------------------------------------- write
 
   /** Write `df` (token schema) as new immutable data files under
-    * data/<uuid>/ and return their manifest rows with min/max stats.
-    * Stats come from a column-pruned re-scan (doc_id, n_tok, source
-    * only — tokens are never re-read).
+    * data/<uuid>/ and return their manifest rows ([[statsFor]]: footer
+    * min/max per file plus sum(n_tok) drained off the n_tok pages — no
+    * other column is re-read).
     */
   def writeDataFiles(df: DataFrame, sortWithinFilesBy: Option[String] = None)
       : Seq[DataFile] =
@@ -260,50 +260,16 @@ class TokenTable(val location: String, val spark: SparkSession) {
     * full pass) plus sum(n_tok) drained off that column's pages through
     * the same stream. No Spark job is scheduled for ordinary commits —
     * the old per-commit sum(n_tok) aggregation job cost a fixed ~0.3 s
-    * of scheduling, a serial floor that capped ingest's N->4N scaling —
-    * while file sets above [[TokenTable.StatsDistributeThreshold]] run the same
-    * per-file routine distributed via `mapPartitions` over the path
-    * list.
+    * of scheduling, a serial floor that capped ingest's N->4N scaling.
+    * The files fan out on [[FileStats.perFile]]: a driver pool, or one
+    * `mapPartitions` job above [[TokenTable.StatsDistributeThreshold]]
+    * files.
     */
   def statsFor(relDir: String): Seq[DataFile] = {
-    val abs = s"$location/$relDir"
     val conf = spark.sessionState.newHadoopConf()
-    val paths = FileStats.listParquet(abs, conf)
-    if (paths.isEmpty) return Nil
+    val paths = FileStats.listParquet(s"$location/$relDir", conf)
     val root = new org.apache.hadoop.fs.Path(location).toUri.getPath
-
-    if (paths.size <= TokenTable.StatsDistributeThreshold) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, paths.size))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futures = paths.map { p =>
-        scala.concurrent.Future(FileStats.statsForFile(p, root, conf))
-      }
-      try {
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration.Inf).flatten
-      } finally pool.shutdown()
-    } else {
-      // Hadoop Configuration is not serializable; ship its entries and
-      // rebuild once per partition.
-      val confEntries: Seq[(String, String)] = {
-        val b = Seq.newBuilder[(String, String)]
-        conf.iterator().forEachRemaining(e => b += (e.getKey -> e.getValue))
-        b.result()
-      }
-      val slices = math.min(paths.size,
-        math.max(1, spark.sparkContext.defaultParallelism))
-      spark.createDataset(paths)
-        .repartition(slices)
-        .mapPartitions { it =>
-          val c = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => c.set(k, v) }
-          it.flatMap(p => FileStats.statsForFile(p, root, c))
-        }
-        .collect().toSeq
-    }
+    FileStats.perFile(spark, conf, paths)((p, c) => FileStats.statsForFile(p, root, c))
   }
 
   /** Persist manifest rows as an immutable manifest parquet; returns its
@@ -508,8 +474,9 @@ object TokenTable {
   /** Row count above which survivor-manifest writes run distributed. */
   val ManifestDistributeThreshold: Long = 65536L
 
-  /** Files-per-commit threshold above which stats collection runs as a
-    * Spark job instead of the driver pool. Below it, job-scheduling
+  /** File count above which a per-file footer pass ([[FileStats.perFile]]:
+    * manifest stats, row-group classification) runs as a Spark job
+    * instead of on the driver pool. Below it, job-scheduling
     * latency dominates the work; above it, driver-side IO becomes the
     * bottleneck (a 10^6-file commit must not funnel through 16 driver
     * threads).

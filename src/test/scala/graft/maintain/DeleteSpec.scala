@@ -229,6 +229,28 @@ class DeleteSpec extends SparkSpec {
     } finally spark.conf.unset("graft.write.rowGroupBytes")
   }
 
+  test("delete: row-group planning over more files than the driver pool takes runs distributed") {
+    // Every file of a hash-spread commit spans the whole keyspace, so a
+    // narrow range grazes all of them and the row-group planner gets
+    // more than StatsDistributeThreshold files: its mapPartitions branch.
+    val dir = tmpDir("del_dist")
+    val t = TokenTable.create(spark, dir)
+    t.append(TokenGen.asTokenRows(TokenGen.generate(
+      spark, 2000, minLen = 16, maxLen = 32, numPartitions = 4))
+      .repartition(TokenTable.StatsDistributeThreshold + 16))
+    val lo = f"doc_${1000}%012d"; val hi = f"doc_${1019}%012d"
+    val hit = col("doc_id") >= lo && col("doc_id") <= hi
+    val expected = checksum(t.scan().filter(!hit))
+    val deleted = t.scan().filter(hit).count()
+    assert(deleted > 0)
+
+    val res = Delete.deleteWhere(t, hit, "deldist-job")
+    assert(res.rewrittenFiles > TokenTable.StatsDistributeThreshold,
+      s"the range must graze more files than the driver pool takes: $res")
+    assert(res.deletedRows == deleted)
+    assert(checksum(t.scan()) == expected, "survivors must equal the filtered table")
+  }
+
   test("group-level cover: full predicate over doc_id/source/n_tok stats") {
     // The group-level hot/cold decision is mightMatch over a footer-
     // shaped stats row — verify its composition over ALL stats columns

@@ -42,31 +42,29 @@ class MaintainSpec extends SparkSpec {
     // from input manifest rows) that exactly match a from-scratch
     // statsFor pass over the written bytes.
     val t = smallFileTable()
-    spark.conf.set("graft.compact.reencodeBelowBytes", "0")
-    try {
-      val before = checksum(t.scan())
-      val filesBefore = t.filesLocal(t.current).size
-      val res = Compact.run(t, targetBytes = 4L * 1024 * 1024,
-        jobId = "job-compact-cc")
-      assert(res.binsRewritten > 0)
-      assert(t.filesLocal(t.current).size < filesBefore)
-      assert(checksum(t.scan()) == before,
-        "concat compaction must not change table state")
-      // Every concat output's additive stats must equal re-derived stats.
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(t.location).toUri.getPath
-      val outs = t.filesLocal(t.current)
-        .filter(_.path.contains("job-compact-cc"))
-      assert(outs.nonEmpty, "concat outputs must be in the manifest")
-      assert(outs.forall(_.path.endsWith("concat.parquet")),
-        "forced-concat bins must all take the bytewise path")
-      outs.foreach { f =>
-        val re = graft.table.FileStats.statsForFile(
-          s"$root/${f.path}", root, conf).get
-        assert(re.copy(path = f.path) == f,
-          s"additive stats must match re-derived stats for ${f.path}:\n  $f\n  $re")
-      }
-    } finally spark.conf.unset("graft.compact.reencodeBelowBytes")
+    val before = checksum(t.scan())
+    val filesBefore = t.filesLocal(t.current).size
+    val res = Compact.run(t, targetBytes = 4L * 1024 * 1024,
+      jobId = "job-compact-cc", parallelism = 8, beforeCommit = () => (),
+      rechunk = false, reencodeBelowBytes = 0L)
+    assert(res.binsRewritten > 0)
+    assert(t.filesLocal(t.current).size < filesBefore)
+    assert(checksum(t.scan()) == before,
+      "concat compaction must not change table state")
+    // Every concat output's additive stats must equal re-derived stats.
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(t.location).toUri.getPath
+    val outs = t.filesLocal(t.current)
+      .filter(_.path.contains("job-compact-cc"))
+    assert(outs.nonEmpty, "concat outputs must be in the manifest")
+    assert(outs.forall(_.path.endsWith("concat.parquet")),
+      "forced-concat bins must all take the bytewise path")
+    outs.foreach { f =>
+      val re = graft.table.FileStats.statsForFile(
+        s"$root/${f.path}", root, conf).get
+      assert(re.copy(path = f.path) == f,
+        s"additive stats must match re-derived stats for ${f.path}:\n  $f\n  $re")
+    }
   }
 
   test("compaction plan: bins respect capacity and cover candidates exactly once") {

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.ingest.TokenGen
 import graft.table.{RowGroupCopy, TokenTable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MERGE's row-group-level cold copy (VERDICT r3 task 2): for a
   * range-local update over multi-row-group files, only the row groups
@@ -146,27 +147,30 @@ class RowGroupMergeSpec extends SparkSpec {
         spark, 2000, minLen = 32, maxLen = 64, numPartitions = 1)
         .repartition(1).sortWithinPartitions("doc_id")))
       val f = t.filesLocal(t.current).head
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+      // MERGE's classifier: a group is hot iff its doc_id bounds
+      // intersect the source-key extent [lo, hi].
+      def split(lo: String, hi: String): RowGroupCopy.Split = {
+        val extLo = Array(UTF8String.fromString(lo))
+        val extHi = Array(UTF8String.fromString(hi))
+        val Seq(s) = RowGroupCopy.planAll(spark, dir, Seq(f.path), "data/c", "data/h")(g =>
+          Merge.intersectsExtents(g.minDocId, g.maxDocId, extLo, extHi))
+        s
+      }
 
       // Source-key extent far above every doc_id in the file: all cold.
-      val coldSplit = RowGroupCopy.splitFile(f.path, dir, root,
-        "data/c", "data/h", extLo = Array("zzz_0"), extHi = Array("zzz_9"), conf = conf)
+      val coldSplit = split("zzz_0", "zzz_9")
       assert(coldSplit.allCold && coldSplit.coldFiles.isEmpty && coldSplit.decodeRel.isEmpty)
 
       // Extent spanning the whole keyspace: all groups hot, decode
       // the ORIGINAL file, no copy written.
-      val hotSplit = RowGroupCopy.splitFile(f.path, dir, root,
-        "data/c", "data/h", extLo = Array(f.minDocId), extHi = Array(f.maxDocId),
-        conf = conf)
+      val hotSplit = split(f.minDocId, f.maxDocId)
       assert(!hotSplit.allCold && hotSplit.decodeRel.contains(f.path))
       assert(hotSplit.coldFiles.isEmpty && hotSplit.decodeBytes == f.bytes)
 
       // Mid-range extent: mixed — cold copy + hot extract, and the
       // two partitions' rows reassemble EXACTLY the original file.
       val lo = f"doc_${800}%012d"; val hi = f"doc_${820}%012d"
-      val mixed = RowGroupCopy.splitFile(f.path, dir, root,
-        "data/c", "data/h", extLo = Array(lo), extHi = Array(hi), conf = conf)
+      val mixed = split(lo, hi)
       assert(!mixed.allCold && mixed.coldFiles.nonEmpty && mixed.decodeRel.nonEmpty)
       // One cold file per contiguous cold run: a mid-range extent leaves
       // a below-run and an above-run, neither straddling the hot range.

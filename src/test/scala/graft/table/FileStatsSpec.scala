@@ -8,8 +8,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThan, Literal}
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
-/** FileStats cross-block reduces (ADVICE r3: the Java-order merge hole)
-  * and the no-n_tok-stats sentinel.
+/** FileStats cross-block reduces (ADVICE r3: the Java-order merge hole),
+  * row groups without min/max, and the no-n_tok-stats sentinel.
   */
 class FileStatsSpec extends SparkSpec {
   import spark.implicits._
@@ -79,5 +79,60 @@ class FileStatsSpec extends SparkSpec {
     val idx2 = new ManifestFileIndex(spark, loc, snap2)
     assert(idx2.listFiles(Nil, Seq(gt)).head.files.isEmpty,
       "a genuine [1,3] range must prune n_tok > 5")
+  }
+
+  test("a row group without min/max (a doc_id over 4 KB) leaves the file's doc_id bound unknown") {
+    import org.apache.spark.sql.functions.{array, lit}
+    import scala.jdk.CollectionConverters._
+    // parquet-hadoop writes no min/max for a chunk whose min and max
+    // together exceed 4 KB. A fold over the groups that DO carry stats
+    // would bound the file by the short ids alone, and a lookup of the
+    // long id would prune the file that holds it.
+    val longId = "doc_" + "z" * 5000
+    val loc = tmpDir("fstats_longid")
+    val t = TokenTable.create(spark, loc)
+    val conf = new Configuration()
+    val root = new org.apache.hadoop.fs.Path(loc).toUri.getPath
+    def write(rel: String, ids: Seq[String]): DataFile = {
+      ids.toDF("doc_id")
+        .select($"doc_id", array(lit(1)).as("tokens"), lit(1).as("n_tok"),
+          lit("web").as("source"))
+        .coalesce(1)
+        .sortWithinPartitions("doc_id") // the long id lands in the last group
+        .write
+        .option("parquet.block.size", "2048")
+        .option("parquet.page.size", "1024")
+        .parquet(s"$loc/$rel")
+      FileStats.statsForFile(FileStats.listParquet(s"$loc/$rel", conf).head, root, conf).get
+    }
+    val short = (0 until 2000).map(i => f"doc_$i%012d")
+    val mixed = write("data/mixed", short :+ longId)
+
+    // Precondition: several groups, and the long id's group really has
+    // no doc_id min/max in the footer.
+    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$loc/${mixed.path}"), conf))
+    val blocks = try footer.getFooter.getBlocks.asScala.toSeq finally footer.close()
+    assert(blocks.size >= 2, s"need >=2 row groups, got ${blocks.size}")
+    assert(blocks.exists(_.getColumns.asScala.exists(c =>
+      c.getPath.toDotString == "doc_id" && !c.getStatistics.hasNonNullValue)),
+      "the long id's row group must carry no doc_id min/max")
+
+    val ord = Search.utf8Ordering
+    def coversLongId(f: DataFile): Boolean =
+      f.minDocId == null || f.maxDocId == null ||
+        (ord.lteq(f.minDocId, longId) && ord.gteq(f.maxDocId, longId))
+    def lookup(f: DataFile): Long =
+      t.read(t.current, Seq(f)).filter($"doc_id" === longId).count()
+    assert(mixed.rows == 2001L)
+    assert(coversLongId(mixed), s"bounds [${mixed.minDocId}, ${mixed.maxDocId}] miss the long id")
+    assert(lookup(mixed) == 1L, "a lookup through the manifest row must find the long id")
+
+    // Concat carries the inputs' bounds forward: its output must too.
+    val plain = write("data/plain", (2000 until 3000).map(i => f"doc_$i%012d"))
+    val cat = RowGroupCopy.concatFiles(Seq(plain, mixed), loc, "data/cat/concat.parquet", conf)
+    assert(cat.rows == 3001L)
+    assert(coversLongId(cat), s"concat bounds [${cat.minDocId}, ${cat.maxDocId}] miss the long id")
+    assert(lookup(cat) == 1L, "a lookup through the concat's manifest row must find the long id")
   }
 }

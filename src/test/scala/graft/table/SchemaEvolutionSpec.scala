@@ -209,11 +209,9 @@ class SchemaEvolutionSpec extends SparkSpec {
       // Force the bytewise-concat attempt: a bin mixing pre- and
       // post-ALTER parquet schemas must fall back to re-encode (which
       // reads through the evolved schema and null-fills), not corrupt.
-      spark.conf.set("graft.compact.reencodeBelowBytes", "0")
-      val res =
-        try graft.maintain.Compact.run(t, targetBytes = 64L * 1024 * 1024,
-          jobId = "evo-compact")
-        finally spark.conf.unset("graft.compact.reencodeBelowBytes")
+      val res = graft.maintain.Compact.run(t, targetBytes = 64L * 1024 * 1024,
+        jobId = "evo-compact", parallelism = 8, beforeCommit = () => (),
+        rechunk = false, reencodeBelowBytes = 0L)
       assert(res.binsRewritten > 0, "compaction found nothing to do")
       val after = spark.table(s"graft.`$loc`")
         .select("doc_id", "n_tok", "lang").collect().toSet

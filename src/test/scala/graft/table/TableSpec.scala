@@ -177,4 +177,37 @@ class TableSpec extends SparkSpec {
     // a correct scan.
     assert(checksum(t.scan()) == checksum(rows.select("doc_id", "tokens", "n_tok", "source")))
   }
+
+  test("a literal-built append and an expression-built append share one parquet layout") {
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    // Literal columns must widen to the canonical nullable layout like
+    // any other non-null column: a folded literal would write `required`
+    // and the two files could not concatenate bytewise.
+    val loc = tmpDir("layout_lit")
+    val t = TokenTable.create(spark, loc)
+    t.append(spark.range(20).select(format_string("doc_a%04d", col("id")).as("doc_id"),
+      array(lit(1), lit(2)).as("tokens"), lit(2).as("n_tok"), lit("web").as("source"))
+      .coalesce(1))
+    t.append(spark.range(20).select(format_string("doc_b%04d", col("id")).as("doc_id"),
+      array((col("id") % 7).cast("int")).as("tokens"),
+      (col("id") % 5 + 1).cast("int").as("n_tok"),
+      format_string("src%d", col("id") % 3).as("source"))
+      .coalesce(1))
+    val files = t.filesLocal(t.current)
+    assert(files.size == 2)
+    val conf = spark.sessionState.newHadoopConf()
+    val Seq(a, b) = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$loc/${f.path}"), conf))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }
+    assert(a == b, s"one layout expected:\n$a\n$b")
+    assert(a.getFields.asScala.forall(_.isRepetition(
+      org.apache.parquet.schema.Type.Repetition.OPTIONAL)))
+    val cat = RowGroupCopy.concatFiles(files, loc, "data/cat/concat.parquet", conf)
+    assert(cat.rows == 40L)
+    assert(checksum(t.read(t.current, Seq(cat))) == checksum(t.scan()))
+  }
 }
